@@ -291,12 +291,12 @@ final class CrawlDriver(
         maxAttempts = cfg.maxAttempts,
         horizon =
           if (cfg.recrawlAfterTicks <= 0) None
-          else Some(lit(batchId - cfg.recrawlAfterTicks + 1)))
+          else Some(bound_value(batchId - cfg.recrawlAfterTicks + 1)))
     else if (cfg.recrawlAfterTicks <= 0) pending
     else graft.operators.Recrawl.pendingWithTtl(
       frontier, fetchLog.select("url_hash", "batch_id"),
       key = "url_hash", tsCol = "batch_id",
-      horizon = lit(batchId - cfg.recrawlAfterTicks + 1))
+      horizon = bound_value(batchId - cfg.recrawlAfterTicks + 1))
   private def seenSegments: Dataset[SeenSet.Segment] =
     lake.read("seen", segmentSchema).as[SeenSet.Segment]
 
@@ -393,9 +393,85 @@ final class CrawlDriver(
     runBatch(batchId)
   }
 
+  /** The tick's write-side frames over its fetch output: `fetch_log` rows
+    * (the FAILED lineage rows of `scheduled` URLs missing from `processed`
+    * included), `extracted` rows, and the discovered links as frontier
+    * candidates before dedup. The tick's timestamp and batch id enter as
+    * [[graft.functions.BoundValue]]s, not literals, so tick b+1 generates
+    * the same code as tick b and reuses its compiled classes (spec-pinned
+    * in TickCodegenSpec). */
+  private[crawl] def writeFrames(
+      scheduled: DataFrame,
+      processed: DataFrame,
+      batchId: Long): (DataFrame, DataFrame, DataFrame) = {
+    val ts = bound_value(tickTs(batchId))
+    val batch = bound_value(batchId)
+    val missing = scheduled.join(processed.select("url_hash"), Seq("url_hash"), "left_anti")
+
+    val fetchRows = processed
+      .select(
+        col("url_hash"), col("url"), col("host"),
+        ts.as("fetch_ts"), lit(200).as("status"), col("bytes"),
+        spark_partition_id().as("partition_id"), batch.as("batch_id"))
+      .unionByName(missing.select(
+        col("url_hash"), col("url"), col("host"),
+        ts.as("fetch_ts"), lit(404).as("status"),
+        lit(0L).as("bytes"),
+        spark_partition_id().as("partition_id"), batch.as("batch_id")))
+
+    val extractedBase = processed
+      .select(
+        col("url_hash"), col("url"),
+        lower(hex(col("url_hash"))).as("job_id"),
+        col("doc.data").as("data"), col("doc.text").as("extracted_text"),
+        ts.as("extract_ts"), batch.as("batch_id"))
+    // fused single-pass enrichment (TextEnrich): one tokenization, zero
+    // regexes, bit-identical to the declarative simhash64/minhash_sig/
+    // doc_fingerprint/qualityFeatures composition it replaces (parity
+    // regression-tested); codegen subexpression elimination evaluates the
+    // struct once for all four projected columns
+    val extractedRows =
+      if (!cfg.enrich) extractedBase
+      else {
+        val e = graft.ml.TextEnrichFunctions.enrich_doc(col("extracted_text"))
+        extractedBase
+          .withColumn("simhash", e.getField("simhash"))
+          .withColumn("minhash_band0", e.getField("minhash_band0"))
+          .withColumn("fingerprint", e.getField("fingerprint"))
+          .withColumn("quality", e.getField("quality"))
+          .withColumn("lang_id", e.getField("lang_id"))
+      }
+
+    // discovery: links of fetched pages, document order preserved
+    val rawLinks = processed
+      .select(
+        col("url_hash").as("src_hash"), col("depth").as("src_depth"),
+        posexplode(col("links")).as(Seq("seq_in_page", "link")))
+    val filteredLinks = cfg.linkFilterContains
+      .map(s => rawLinks.where(col("link").contains(s)))
+      .getOrElse(rawLinks)
+      .where(col("src_depth") + 1 <= cfg.maxDepth)
+
+    // fused link identity: hash + canonical url + host from ONE
+    // canonicalization per discovered link (the unfused triple
+    // canonicalized the same string up to 3x in the hottest per-link path;
+    // bit-identical, parity-tested — round-5 review)
+    val li = link_identity(col("link"))
+    val candidates = filteredLinks
+      .select(
+        li.getField("url_hash").as("url_hash"),
+        li.getField("url").as("url"),
+        li.getField("host").as("host"),
+        (col("src_depth") + 1).as("depth"),
+        ts.as("discovery_ts"),
+        col("seq_in_page").cast("long").as("seq_in_page"),
+        col("src_hash"),
+        (col("src_depth") + 1).cast("double").as("priority"))
+    (fetchRows, extractedRows, candidates)
+  }
+
   private def runBatch(batchId: Long): TickStats = {
     val tEntry = System.nanoTime()
-    val ts = tickTs(batchId)
 
     // cross-tick host cooldown: only the last K tick partitions of
     // fetch_log are scanned (batch_id min/max prunes parquet files, and
@@ -408,6 +484,7 @@ final class CrawlDriver(
       if (cfg.hostCooldownTicks <= 0) pendingAt(batchId)
       else Politeness.hostCooldown(
         pendingAt(batchId),
+        // a Literal, not bound_value: parquet min/max pushdown needs one
         fetchLog.where(col("batch_id") >= lit(batchId - cfg.hostCooldownTicks)).select("host"))
     val allowed = RobotsFilter.filterAllowed(cooled, robots)
     mark("allowed")
@@ -459,68 +536,8 @@ final class CrawlDriver(
     // retries ticks must not accumulate one cached fetch output per failed
     // attempt; round-5 review)
     try {
-    val missing = scheduled.join(processed.select("url_hash"), Seq("url_hash"), "left_anti")
-
-    val fetchRows = processed
-      .select(
-        col("url_hash"), col("url"), col("host"),
-        lit(ts).as("fetch_ts"), lit(200).as("status"), col("bytes"),
-        spark_partition_id().as("partition_id"), lit(batchId).as("batch_id"))
-      .unionByName(missing.select(
-        col("url_hash"), col("url"), col("host"),
-        lit(ts).as("fetch_ts"), lit(404).as("status"),
-        lit(0L).as("bytes"),
-        spark_partition_id().as("partition_id"), lit(batchId).as("batch_id")))
-
-    val extractedBase = processed
-      .select(
-        col("url_hash"), col("url"),
-        lower(hex(col("url_hash"))).as("job_id"),
-        col("doc.data").as("data"), col("doc.text").as("extracted_text"),
-        lit(ts).as("extract_ts"), lit(batchId).as("batch_id"))
-    // fused single-pass enrichment (TextEnrich): one tokenization, zero
-    // regexes, bit-identical to the declarative simhash64/minhash_sig/
-    // doc_fingerprint/qualityFeatures composition it replaces (parity
-    // regression-tested); codegen subexpression elimination evaluates the
-    // struct once for all four projected columns
-    val extractedRows =
-      if (!cfg.enrich) extractedBase
-      else {
-        val e = graft.ml.TextEnrichFunctions.enrich_doc(col("extracted_text"))
-        extractedBase
-          .withColumn("simhash", e.getField("simhash"))
-          .withColumn("minhash_band0", e.getField("minhash_band0"))
-          .withColumn("fingerprint", e.getField("fingerprint"))
-          .withColumn("quality", e.getField("quality"))
-          .withColumn("lang_id", e.getField("lang_id"))
-      }
+    val (fetchRows, extractedRows, candidates) = writeFrames(scheduled, processed, batchId)
     mark("extractedRows")
-
-    // discovery: links of fetched pages, document order preserved
-    val rawLinks = processed
-      .select(
-        col("url_hash").as("src_hash"), col("depth").as("src_depth"),
-        posexplode(col("links")).as(Seq("seq_in_page", "link")))
-    val filteredLinks = cfg.linkFilterContains
-      .map(s => rawLinks.where(col("link").contains(s)))
-      .getOrElse(rawLinks)
-      .where(col("src_depth") + 1 <= cfg.maxDepth)
-
-    // fused link identity: hash + canonical url + host from ONE
-    // canonicalization per discovered link (the unfused triple
-    // canonicalized the same string up to 3x in the hottest per-link path;
-    // bit-identical, parity-tested — round-5 review)
-    val li = link_identity(col("link"))
-    val candidates = filteredLinks
-      .select(
-        li.getField("url_hash").as("url_hash"),
-        li.getField("url").as("url"),
-        li.getField("host").as("host"),
-        (col("src_depth") + 1).as("depth"),
-        lit(ts).as("discovery_ts"),
-        col("seq_in_page").cast("long").as("seq_in_page"),
-        col("src_hash"),
-        (col("src_depth") + 1).cast("double").as("priority"))
 
     // crawl-scope rule gate on the canonical url — scan-side expression,
     // evaluated once per link before the dedup shuffle (out-of-scope links

@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, Literal, UnaryExpression}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
@@ -171,6 +173,33 @@ case class ResolveUrl(left: Expression, right: Expression) extends BinaryExpress
     copy(left = l, right = r)
 }
 
+/** `bound_value(v)`: a constant that changes from call to call (a tick's
+  * timestamp, batch id or partition id) without changing the generated
+  * code. Spark inlines long and timestamp `Literal`s into the Java source,
+  * so a plan that differs only in `lit(batchId)` compiles new classes on
+  * every tick; this leaf hands its value to the compiled class through the
+  * `references` array instead, so every tick's source is byte-identical and
+  * Spark's codegen cache serves it. `eval` returns the same value.
+  *
+  * Not foldable (constant folding would turn it back into a `Literal`):
+  * use it for projected values and post-aggregate comparisons only. A scan
+  * filter keeps its `Literal`, because partition pruning and parquet
+  * min/max pushdown need one. `value` is Catalyst's internal form
+  * (`Literal(v).value`), never null. */
+case class BoundValue(value: Any, dataType: DataType) extends LeafExpression {
+  require(value != null, "bound_value needs a non-null value")
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def prettyName: String = "bound_value"
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("boundValue", value, CodeGenerator.boxedType(dataType))
+    val read = if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${javaType}Value()" else ref
+    ev.copy(code = code"final $javaType ${ev.value} = $read;", isNull = FalseLiteral)
+  }
+}
+
 /** Column-API + SQL-registration surface for the custom expressions. */
 object GraftFunctions {
   import graft.functions.kernels.BlockGraphKernel
@@ -204,6 +233,13 @@ object GraftFunctions {
 
   def resolve_url(base: Column, href: Column): Column =
     ExpressionUtils.column(ResolveUrl(ExpressionUtils.expression(base), ExpressionUtils.expression(href)))
+
+  /** `lit(v)` for a value that changes per call but must not change the
+    * generated code (see [[BoundValue]]); same type and value as `lit(v)`. */
+  def bound_value(v: Any): Column = {
+    val l = Literal(v)
+    ExpressionUtils.column(BoundValue(l.value, l.dataType))
+  }
 
   /** Registers every function for SQL use (`SELECT url_hash64(url) ...`). */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.GraftFunctions.bound_value
+
 /** Iceberg-style snapshot/manifest commit layer over Parquet (SURVEY.md
   * §7.1: the sandbox ships no Iceberg jar, so the engine owns a thin,
   * Iceberg-shaped layer — snapshots, manifests, atomic commit, time-travel
@@ -280,17 +282,23 @@ final class CrawlLake(
     * dynamic-overwrite staging churn. Invisible to readers until a manifest
     * referencing the partition id commits. */
   private def writeBucketedPartition(table: String, df: DataFrame, partitionId: Long): Unit = {
-    val spec = bucketed(table)
     val name = catalogName(table)
     dropPartition(table, partitionId)
     val t0 = System.nanoTime()
-    df.withColumn("_pbatch", lit(partitionId))
-      .select((spec.schema.fieldNames :+ "_pbatch").map(col).toIndexedSeq: _*)
+    bucketedInsert(table, df, partitionId)
       .write.mode(SaveMode.Append)
       .insertInto(name)
     if (sys.env.contains("GRAFT_TRACE"))
       println(f"[trace] write $table (bucketed): ${(System.nanoTime() - t0) / 1e9}%.2fs")
   }
+
+  /** The rows one bucketed partition write inserts: the table's columns in
+    * catalog order plus `_pbatch`. The partition id is a
+    * [[graft.functions.BoundValue]], not a literal, so every tick's (and
+    * every compaction's) insert generates the same code. */
+  private[graft] def bucketedInsert(table: String, df: DataFrame, partitionId: Long): DataFrame =
+    df.withColumn("_pbatch", bound_value(partitionId))
+      .select((bucketed(table).schema.fieldNames :+ "_pbatch").map(col).toIndexedSeq: _*)
 
   private def dropPartition(table: String, partitionId: Long): Unit = {
     val partDir = rootPath.resolve("bucketed").resolve(table).resolve(s"_pbatch=$partitionId")

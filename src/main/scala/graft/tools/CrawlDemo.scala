@@ -2,11 +2,11 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.crawl.{CrawlConfig, CrawlDriver}
 import graft.lake.CrawlLake
 import graft.synth.PageSynth
+import graft.util.CodegenWatch
 
 /** End-to-end demo/verification entry point: synthesizes a corpus, runs a
   * multi-tick crawl, prints per-tick stats, the head of the deterministic
@@ -21,12 +21,8 @@ object CrawlDemo {
     val ticks = args.lift(2).map(_.toInt).getOrElse(4)
     val cpus = args.lift(3).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.local(cpus.toInt, shufflePartitions = Some(cpus.toInt))
       .appName("graft-crawl-demo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -41,12 +37,18 @@ object CrawlDemo {
 
     driver.init(PageSynth.seeds(nPages, 5))
     val t0 = System.nanoTime()
-    val stats = driver.run(ticks)
+    // each tick with its codegen compiles: a steady-state tick reuses the
+    // classes earlier ticks compiled and compiles nothing
+    val ticked = (1 to ticks).map { _ =>
+      val c0 = CodegenWatch.compiles
+      val s = driver.tick()
+      s -> (CodegenWatch.compiles - c0)
+    }
     val secs = (System.nanoTime() - t0) / 1e9
-    stats.foreach(s => println(
-      s"[demo] tick ${s.batchId}: scheduled=${s.scheduled} fetched=${s.fetched} " +
-        s"failed=${s.failed} newUrls=${s.admittedNew}"))
-    val fetchedTotal = stats.map(_.fetched).sum
+    ticked.foreach { case (s, c) => println(
+      f"[demo] tick ${s.batchId}: scheduled=${s.scheduled} fetched=${s.fetched} " +
+        f"failed=${s.failed} newUrls=${s.admittedNew} compiles=${c.count} (${c.ms}%.0f ms)") }
+    val fetchedTotal = ticked.map(_._1.fetched).sum
     println(f"[demo] $fetchedTotal pages in $secs%.1fs = ${fetchedTotal / secs}%.1f fetched+extracted/s (lake=${lake.root})")
     println("[demo] crawl order head:")
     driver.crawlOrder().show(10, truncate = false)

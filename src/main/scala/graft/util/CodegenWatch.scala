@@ -6,6 +6,8 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Counts Catalyst codegen COMPILE FAILURES so a bench/verify run can
   * surface them as first-class output instead of burying a janino stack
@@ -22,6 +24,9 @@ import org.apache.logging.log4j.core.config.Property
   * source, so the count is "distinct failing codegen units seen by this
   * JVM", which is exactly the regression signal: non-zero means some plan
   * in the run executes interpreted.
+  *
+  * [[compiles]] reads the other side: how many classes were compiled at
+  * all (codegen-cache misses), to report compiles per tick or per query.
   */
 object CodegenWatch {
 
@@ -56,4 +61,19 @@ object CodegenWatch {
   }
 
   def available: Boolean = installed
+
+  /** A count of Janino compiles and their total time: one [[compiles]]
+    * reading, or the difference of two. */
+  final case class Compiles(count: Long, ms: Double) {
+    def -(earlier: Compiles): Compiles = Compiles(count - earlier.count, ms - earlier.ms)
+  }
+
+  /** Compiles of generated classes in this JVM so far, read from Spark's
+    * own counters: the count of `CodegenMetrics.METRIC_COMPILATION_TIME`
+    * (one update per compile; a codegen-cache hit compiles nothing) and the
+    * code generator's exact total compile time (the histogram keeps only a
+    * sample of its values). Take two readings and subtract them to get the
+    * compiles of one tick or one query. Needs no [[install]]. */
+  def compiles: Compiles =
+    Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
 }

@@ -47,6 +47,18 @@ class CodegenWatchSpec extends AnyFunSuite {
     assert(CodegenWatch.count == before)
   }
 
+  test("compiles: the count rises on a new expression and stays flat on an identical repeat") {
+    // a literal no earlier query used: its source is new to the class cache
+    val query = s"sum(id * ${System.nanoTime()})"
+    val before = CodegenWatch.compiles
+    spark.range(100).selectExpr(query).collect()
+    val first = CodegenWatch.compiles
+    assert((first - before).count > 0 && (first - before).ms > 0.0)
+    spark.range(100).selectExpr(query).collect()
+    assert((CodegenWatch.compiles - first).count == 0,
+      "an identical repeat must be served from the compiled-class cache")
+  }
+
   test("the production analysis kernels compile cleanly (the round-5 defect stays fixed)") {
     CodegenWatch.install()
     import spark.implicits._
