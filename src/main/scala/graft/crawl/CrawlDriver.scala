@@ -17,7 +17,6 @@ import graft.seen.SeenSet
 final case class CrawlConfig(
     budget: Int = 5,
     seenPartitions: Int = SeenSet.DefaultPartitions,
-    seenKind: String = "bloom",
     expectedPerSegment: Long = 1L << 16,
     /** reference parity: Some("DownloadDocumentPDF") replicates the Op-4
       * predicate (`scrape-pdfs-from-website/lambda.ts:65-67`); None crawls
@@ -39,14 +38,6 @@ final case class CrawlConfig(
       * extracted page inside the tick — the webtext-pipeline per-page
       * stage; off by default to keep the reference-parity output schema. */
     enrich: Boolean = false,
-    /** force the fetch join's build side (the scheduled batch) to
-      * broadcast. Default false: AQE size-gates the choice at runtime from
-      * the politeness output's ACTUAL size — a small batch becomes a
-      * broadcast hash join with zero pages-side shuffle, a huge one falls
-      * back to a shuffled join instead of pushing hundreds of MB through
-      * the driver (the round-1 plan broadcast unconditionally, which dies
-      * at 10^6+ hosts × budget). */
-    fetchForceBroadcast: Boolean = false,
     /** cross-tick politeness: a host fetched in any of the last
       * `hostCooldownTicks` ticks is not scheduled again until the window
       * passes (0 = off). Generalizes the reference's rate(720 minutes)
@@ -79,7 +70,7 @@ final case class CrawlConfig(
       * ZERO shuffle; beyond it the segment-partitioned cogroup probe runs
       * (see [[graft.seen.SeenSet.filterNew]]). */
     seenBroadcastMaxBytes: Long = SeenSet.DefaultBroadcastMaxBytes,
-    /** fold seen-set delta lists into the Bloom/cuckoo segments every K
+    /** fold seen-set delta lists into the Bloom segments every K
       * ticks. Between compactions a tick appends exact sorted-hash delta
       * segments (bytes ∝ admitted URLs, not P × filter size); the probe
       * cogroup ORs filter ⊕ deltas, so correctness is unaffected. */
@@ -96,7 +87,13 @@ final case class CrawlConfig(
       * on fast storage) when a tick's fetched pages exceed executor
       * memory — at 100 TB scale the fetch join output never fits on-heap. */
     persistLevel: org.apache.spark.storage.StorageLevel =
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) {
+
+  /** Bloom is the seen set's only filter kind; kept for callers that still
+    * read the kind. */
+  @deprecated("Bloom is the only seen-set filter kind", "0.1.0")
+  def seenKind: String = "bloom"
+}
 
 final case class TickStats(
     batchId: Long,
@@ -116,7 +113,7 @@ final case class TickStats(
   * State model (all in [[CrawlLake]], committed atomically per tick):
   *  - `frontier`  append-only, exactly one row per canonical url_hash
   *    (first-discovery-wins at insert) — membership IS the seen set;
-  *  - `seen`      Bloom/cuckoo segments over frontier hashes (replace);
+  *  - `seen`      Bloom segments over frontier hashes (replace);
   *  - `fetch_log` lineage: every scheduled URL with status/bytes/partition;
   *    PENDING = frontier ∖ fetch_log, so state is derived, never mutated;
   *  - `extracted` deterministic text+KV per fetched page.
@@ -131,11 +128,13 @@ final case class TickStats(
   *  3. politeness: window with pre-shuffle WindowGroupLimit (see
   *     [[Politeness]]) — shuffle carries O(hosts·budget) rows only;
   *  4. fetch: inner join pages ⋈ scheduled batch: AQE size-gates the
-  *     broadcast from the politeness output's runtime size
-  *     ([[CrawlConfig.fetchForceBroadcast]]); at scale the pages scan is
-  *     pruned by DPP/bucketing on url_hash — never a full-corpus shuffle;
+  *     broadcast from the politeness output's runtime size (a small batch
+  *     becomes a broadcast hash join, a huge one a shuffled join); at scale
+  *     the pages scan is pruned by DPP/bucketing on url_hash — never a
+  *     full-corpus shuffle;
   *  5. extraction runs inside whole-stage codegen ([[graft.functions.ExtractDocument]]);
-  *  6. seen probe: cogrouped segment probe + exact confirm ([[SeenSet]]).
+  *  6. seen probe: Bloom segment probe + one conditioned exact-confirm
+  *     anti-join against the frontier ([[SeenSet]]).
   */
 final class CrawlDriver(
     spark: SparkSession,
@@ -175,19 +174,6 @@ final class CrawlDriver(
           s"seen set was built with seenPartitions=$stored but this driver is configured " +
             s"with ${cfg.seenPartitions} — the partitioned probe would silently mis-route; " +
             "resume with the original P (or rebuild the seen set from the frontier)")
-      }
-      // a kind switch mid-lake is CORRECT (mixed segments probe side by
-      // side) but never converges: compaction can't fold bloom into cuckoo
-      // or vice versa, so the old kind's segments ride along forever. Warn
-      // loudly instead of failing — the operator may be migrating on
-      // purpose (round-5 advisor).
-      "\"kind\"\\s*:\\s*\"(\\w+)\"".r.findFirstMatchIn(txt).map(_.group(1)).foreach { storedKind =>
-        if (storedKind != cfg.seenKind)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"seen set was built with kind=$storedKind but this driver is configured with " +
-              s"kind=${cfg.seenKind}: correctness is unaffected (mixed segments probe " +
-              "side by side) but compaction will never fold the old kind's segments — " +
-              "rebuild the seen set from the frontier to converge")
       }
     }
   }
@@ -373,15 +359,14 @@ final class CrawlDriver(
     val distinctSeeds = seedRows.groupBy(_.url_hash).map(_._2.minBy(_.seq_in_page)).toSeq
     val frontierDf = spark.createDataset(distinctSeeds).toDF()
     val segments = SeenSet.buildDeltaSegments(
-      frontierDf.select("url_hash"), cfg.seenPartitions, cfg.expectedPerSegment, kind = cfg.seenKind)
+      frontierDf.select("url_hash"), cfg.seenPartitions, cfg.expectedPerSegment)
     val snap =
       lake.commit(0L, appends = Map("frontier" -> frontierDf), replaces = Map("seen" -> segments.toDF()))
     // record the seen-set geometry for the resume-time drift guard above —
     // AFTER the snapshot-0 commit succeeds: a meta file describing a failed
     // (effectively empty) commit would make a later driver with different
     // seenPartitions fail the drift guard spuriously (round-5 advisor)
-    java.nio.file.Files.writeString(seenMetaPath,
-      s"""{"p":${cfg.seenPartitions},"kind":"${cfg.seenKind}"}""")
+    java.nio.file.Files.writeString(seenMetaPath, s"""{"p":${cfg.seenPartitions}}""")
     snap
   }
 
@@ -507,14 +492,13 @@ final class CrawlDriver(
     val scheduledCount = scheduled.count()
     if (scheduledCount == 0L) return commitEmptyTick(batchId)
 
-    // fetch = pages ⋈ scheduled (AQE size-gates the broadcast — see
-    // CrawlConfig.fetchForceBroadcast), and BOTH extraction kernels run
+    // fetch = pages ⋈ scheduled (AQE size-gates the broadcast from the
+    // batch's runtime size), and BOTH extraction kernels run
     // in this same single pass so the fat `html` column dies at the scan:
     // what gets persisted/reused downstream is the compact processed row
     // (doc struct + links array), ~50x smaller than raw html. At 100 TB
     // this is the difference between caching gigabytes and caching the
     // corpus. Misses become FAILED lineage rows.
-    val schedSide = if (cfg.fetchForceBroadcast) broadcast(scheduled) else scheduled
     // extract_page fuses document extraction + link/sitemap discovery into
     // one expression: the fat html column is decoded ONCE per page (the
     // unfused extract_document + extract_links pair decoded it twice);
@@ -523,7 +507,7 @@ final class CrawlDriver(
     val pageExpr = extract_page(
       col("html"), col("url"), cfg.blockCap, sitemapAuto = cfg.sitemapDiscovery)
     val processed = pagesKeyed
-      .join(schedSide, Seq("url_hash"), "inner")
+      .join(scheduled, Seq("url_hash"), "inner")
       .select(
         col("url_hash"), col("url"), col("host"), col("depth"),
         length(col("html")).cast("long").as("bytes"),
@@ -557,7 +541,7 @@ final class CrawlDriver(
       .as[FrontierEntry]
     mark("batchDedup")
 
-    // cross-batch dedup: bloom/cuckoo pre-screen, exact confirm.
+    // cross-batch dedup: Bloom pre-screen, exact confirm.
     // localCheckpoint for the same reason as `scheduled`: fresh's plan
     // contains the frontier scan (exact confirm), which the frontier INSERT
     // would invalidate mid-commit.
@@ -605,7 +589,7 @@ final class CrawlDriver(
       if (compactTick)
         (Map.empty[String, DataFrame],
           Map("seen" -> SeenSet.mergeSegments(
-            seenSegments, deltaSegments, cfg.seenKind, cfg.expectedPerSegment).toDF()))
+            seenSegments, deltaSegments, cfg.expectedPerSegment).toDF()))
       else (Map("seen" -> deltaSegments.toDF()), Map.empty[String, DataFrame])
 
     lake.commit(
@@ -657,8 +641,7 @@ final class CrawlDriver(
     val seenReplace =
       if (!compactTick) Map.empty[String, DataFrame]
       else Map("seen" -> SeenSet.mergeSegments(
-        seenSegments, SeenSet.emptySegments(spark),
-        cfg.seenKind, cfg.expectedPerSegment).toDF())
+        seenSegments, SeenSet.emptySegments(spark), cfg.expectedPerSegment).toDF())
     lake.commit(batchId, appends = Map.empty, replaces = seenReplace)
     // mirror runBatch's post-compaction gate re-measure: a compaction can
     // SHRINK the seen set below the broadcast gate, and in TTL/cooldown

@@ -24,9 +24,8 @@ import graft.util.XxHash64
   * every key in a segment shares `url_hash ≡ pid (mod P)`, so a raw-key
   * first probe concentrated in a coset of size numBits/gcd(P, numBits)
   * (half the bit array for the default even numBits), densifying those
-  * bits and inflating measured FPR past the configured fpp — the same
-  * low-bits-structure bug class the cuckoo filter's v1 bucket layout had
-  * (round-5 review).
+  * bits and inflating measured FPR past the configured fpp (round-5
+  * review).
   *
   * v3 format (round-5 advisor): the serialized header carries the DESIGN
   * CAPACITY n the filter was sized for, instead of deriving it from m and
@@ -34,8 +33,9 @@ import graft.util.XxHash64
   * sizing, so a filter created with a clamped/rounded k self-reported a
   * capacity above its real design n and the compaction overfill gate
   * could still push FPR past the configured fpp. Older formats (GBLM raw-
-  * key h1, GBL2 derived capacity) hard-fail at read with a rebuild hint:
-  * see README "Seen-set format migrations".
+  * key h1, GBL2 derived capacity) hard-fail at the seen set's format gate
+  * ([[SeenSegments.readableMagic]]) with a rebuild hint: see README
+  * "Seen-set format migrations".
   */
 final class GraftBloomFilter private (
     val numBits: Long,
@@ -139,12 +139,6 @@ object GraftBloomFilter {
   def deserialize(bytes: Array[Byte]): GraftBloomFilter = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val magic = bb.getInt
-    require(magic != MagicV1 && magic != MagicV2,
-      "bloom segment uses a retired serialization format " +
-        f"(magic 0x$magic%08x; GBLM = raw-key h1, GBL2 = derived capacity); it cannot be " +
-        "probed by this build — rebuild the seen set from the exact frontier " +
-        "(graft.tools.SeenRebuild, or SeenSet.buildDeltaSegments over frontier.url_hash; " +
-        "see README \"Seen-set format migrations\")")
     require(magic == Magic, f"not a graft bloom segment (magic 0x$magic%08x)")
     val k = bb.getInt
     val numBits = bb.getLong

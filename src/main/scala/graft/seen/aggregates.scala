@@ -3,8 +3,7 @@ package graft.seen
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
@@ -56,82 +55,6 @@ case class BloomBuildAgg(
     copy(child = cs.head)
 }
 
-/** Cuckoo-filter twin of [[BloomBuildAgg]]. */
-case class CuckooBuildAgg(
-    child: Expression,
-    log2Buckets: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[GraftCuckooFilter] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "cuckoo_build"
-
-  override def createAggregationBuffer(): GraftCuckooFilter =
-    GraftCuckooFilter.create(log2Buckets)
-
-  override def update(buf: GraftCuckooFilter, input: InternalRow): GraftCuckooFilter = {
-    val v = child.eval(input)
-    if (v != null) {
-      // saturation is surfaced, not swallowed: an unplaceable key would be a
-      // silent false-negative (a URL recrawled forever)
-      if (!buf.insert(v.asInstanceOf[Long]))
-        throw new IllegalStateException(
-          s"cuckoo segment saturated at ${buf.itemsInserted} items (log2Buckets=$log2Buckets); resize P or segment capacity")
-    }
-    buf
-  }
-
-  override def merge(b1: GraftCuckooFilter, b2: GraftCuckooFilter): GraftCuckooFilter = {
-    val failed = b1.mergeInPlace(b2)
-    if (failed > 0)
-      throw new IllegalStateException(s"cuckoo merge dropped $failed fingerprints; resize segment capacity")
-    b1
-  }
-
-  override def eval(buf: GraftCuckooFilter): Any = buf.serialized
-  override def serialize(buf: GraftCuckooFilter): Array[Byte] = buf.serialized
-  override def deserialize(bytes: Array[Byte]): GraftCuckooFilter =
-    GraftCuckooFilter.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): CuckooBuildAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CuckooBuildAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
-    copy(child = cs.head)
-}
-
-/** `filter_might_contain(segment, url_hash)` — probe either filter kind
-  * (dispatch on the serialized magic). Deserialization is memoized per
-  * expression instance keyed on the segment's object identity, so probing N
-  * rows against one broadcast segment deserializes once per task, not per
-  * row. (The bulk-probe path in [[SeenSet]] avoids even that by cogrouping;
-  * this expression is for scalar/test use and stays CodegenFallback.)
-  */
-case class FilterMightContain(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "filter_might_contain"
-
-  @transient private var cachedRef: AnyRef = _
-  @transient private var cachedProbe: Long => Boolean = _
-
-  override protected def nullSafeEval(seg: Any, hash: Any): Any = {
-    val bytes = seg.asInstanceOf[Array[Byte]]
-    if (!(bytes eq cachedRef)) {
-      cachedProbe = SeenSegments.probeFn(bytes)
-      cachedRef = bytes
-    }
-    cachedProbe(hash.asInstanceOf[Long])
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** `seen_probe(url_hash)` — scan-side probe of the WHOLE partitioned seen
   * set against a broadcast of its segments (pid → segment blobs, probes
   * OR'd). This is the small-seen-set fast path of [[SeenSet.filterNew]]:
@@ -181,97 +104,86 @@ case class SeenProbeBroadcast(
 }
 
 object SeenSegments {
-  private def magicOf(bytes: Array[Byte]): Int = {
+  /** Segment formats this build cannot read, by magic. */
+  private val Unreadable: Map[Int, String] = Map(
+    GraftBloomFilter.MagicV1 -> "GBLM (retired Bloom layout: raw-key h1)",
+    GraftBloomFilter.MagicV2 -> "GBL2 (retired Bloom layout: capacity derived from m and k)",
+    0x47434b46 -> "GCKF (cuckoo filter, no longer supported)",
+    0x47434b32 -> "GCK2 (cuckoo filter, no longer supported)")
+
+  /** The seen set's one format gate: probe, merge and compaction read every
+    * segment's magic through it, so a blob this build cannot read fails
+    * loudly with the migration path instead of being probed as something
+    * else or carried through compaction untouched. Returns the magic of a
+    * readable segment (Bloom v3 or exact list). */
+  private[seen] def readableMagic(bytes: Array[Byte]): Int = {
     require(bytes.length >= 4, "empty segment blob")
-    java.nio.ByteBuffer.wrap(bytes, 0, 4).getInt
+    val m = java.nio.ByteBuffer.wrap(bytes, 0, 4).getInt
+    if (m != GraftBloomFilter.Magic && m != GraftLongList.Magic) {
+      val what = Unreadable.getOrElse(m, f"format 0x$m%08x (unknown)")
+      throw new IllegalArgumentException(
+        s"seen segment $what cannot be read by this build; rebuild the seen set from the " +
+          "frontier with graft.tools.SeenRebuild (README \"Seen-set format migrations\")")
+    }
+    m
   }
 
   /** Magic-dispatched probe function over a serialized segment. */
-  def probeFn(bytes: Array[Byte]): Long => Boolean = magicOf(bytes) match {
-    case GraftBloomFilter.Magic =>
-      val f = GraftBloomFilter.deserialize(bytes); f.mightContain _
-    case GraftCuckooFilter.Magic =>
-      val f = GraftCuckooFilter.deserialize(bytes); f.mightContain _
-    case GraftLongList.Magic =>
-      GraftLongList.containsFn(bytes)
-    case m => throw new IllegalArgumentException(f"unknown segment magic 0x$m%08x")
-  }
+  def probeFn(bytes: Array[Byte]): Long => Boolean =
+    if (readableMagic(bytes) == GraftLongList.Magic) GraftLongList.containsFn(bytes)
+    else GraftBloomFilter.deserialize(bytes).mightContain _
 
-  /** Magic-dispatched binary merge of two serialized segments — used to fold
-    * a batch's delta segments into the previous snapshot's segments with a
-    * P-row join, no rehash of history. Kinds compose: filter ⊕ filter is the
-    * native merge (Bloom OR / cuckoo fingerprint re-insert, same geometry
-    * required); filter ⊕ list re-inserts the list's raw keys (no geometry
-    * coupling — this is how exact deltas compact into filters); list ⊕ list
-    * concatenates. */
-  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val (ma, mb) = (magicOf(a), magicOf(b))
-    // normalize: when exactly one side is a list, fold it into the filter
-    if (ma == GraftLongList.Magic && mb != GraftLongList.Magic) return merge(b, a)
-    (ma, mb) match {
-      case (GraftBloomFilter.Magic, GraftLongList.Magic) =>
+  /** Magic-dispatched binary merge of two serialized segments: Bloom ⊕
+    * Bloom is the bitwise OR (same geometry required); Bloom ⊕ list
+    * re-inserts the list's raw keys (no geometry coupling — this is how
+    * exact deltas compact into filters); list ⊕ list concatenates. */
+  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    (readableMagic(a), readableMagic(b)) match {
+      case (GraftLongList.Magic, GraftLongList.Magic) =>
+        GraftLongList.serialize(GraftLongList.deserialize(a) ++ GraftLongList.deserialize(b))
+      case (GraftLongList.Magic, _) => merge(b, a)
+      case (_, GraftLongList.Magic) =>
         val f = GraftBloomFilter.deserialize(a)
         GraftLongList.deserialize(b).foreach(f.insert)
         f.serialized
-      case (GraftCuckooFilter.Magic, GraftLongList.Magic) =>
-        val f = GraftCuckooFilter.deserialize(a)
-        GraftLongList.deserialize(b).foreach { k =>
-          if (!f.insert(k))
-            throw new IllegalStateException("cuckoo segment saturated while folding delta keys")
-        }
-        f.serialized
-      case (GraftLongList.Magic, GraftLongList.Magic) =>
-        GraftLongList.serialize(GraftLongList.deserialize(a) ++ GraftLongList.deserialize(b))
-      case (GraftBloomFilter.Magic, GraftBloomFilter.Magic) =>
+      case _ =>
         GraftBloomFilter.deserialize(a).mergeInPlace(GraftBloomFilter.deserialize(b)).serialized
-      case (GraftCuckooFilter.Magic, GraftCuckooFilter.Magic) =>
-        val f = GraftCuckooFilter.deserialize(a)
-        val failed = f.mergeInPlace(GraftCuckooFilter.deserialize(b))
-        if (failed > 0) throw new IllegalStateException(s"cuckoo merge dropped $failed fingerprints")
-        f.serialized
-      case (x, y) => throw new IllegalArgumentException(f"unmergeable segment kinds 0x$x%08x / 0x$y%08x")
     }
-  }
 
-  /** Fold one partition's whole segment stack (filters ⊕ exact delta lists,
+  /** Fold one partition's whole segment stack (Blooms ⊕ exact delta lists,
     * any order, any count) into a BOUNDED set of segments — the compaction
-    * primitive behind [[SeenSet.mergeSegments]] (round-2 advisor items 1+2):
+    * primitive behind [[SeenSet.mergeSegments]]:
     *
-    *  - delta-list keys fold into the partition's filter when one exists
-    *    (raw keys re-insert; no geometry coupling);
-    *  - a partition with NO filter converges: while its merged exact list is
+    *  - delta-list keys fold into the partition's first Bloom while it has
+    *    design headroom (raw keys re-insert; no geometry coupling);
+    *  - a partition with NO Bloom converges: while its merged exact list is
     *    smaller than the configured filter it stays an exact list (smaller
-    *    AND zero-FPR — strictly better), but once it outgrows the filter
-    *    size a fresh Bloom/cuckoo filter is built from the keys (all
-    *    recoverable from the list), so no partition grows without bound at
-    *    8 B/key with a full rewrite per compaction;
-    *  - cuckoo saturation is never a hard-stop: keys that cannot be placed
-    *    are emitted as a standalone exact-list segment NEXT TO the filter —
-    *    the probe already ORs every segment of a partition — and filter
-    *    pairs that cannot merge (saturation, geometry drift after a config
-    *    change) stay side by side the same way.
+    *    AND zero-FPR), but once it outgrows the filter size a fresh Bloom is
+    *    built from the keys, so no partition grows without bound at 8 B/key
+    *    with a full rewrite per compaction;
+    *  - Blooms that cannot merge (past their combined design load, or
+    *    geometry drift after a config change) stay side by side — the probe
+    *    already ORs every segment of a partition.
     *
     * Returns (serialized segment, n_items) pairs; order deterministic. */
   def compactStack(
       segs: Seq[(Array[Byte], Long)],
-      kind: String,
       expectedPerSegment: Long,
       fpp: Double = 1e-3): Seq[(Array[Byte], Long)] = {
-    val (listSegs, filterSegs) = segs.partition(s => magicOf(s._1) == GraftLongList.Magic)
+    val (listSegs, filterSegs) = segs.partition(s => readableMagic(s._1) == GraftLongList.Magic)
     // distinct delta keys across every list segment (serialize sorts+dedups)
     val keys: Array[Long] =
       if (listSegs.isEmpty) Array.emptyLongArray
       else GraftLongList.deserialize(GraftLongList.serialize(
         listSegs.iterator.flatMap(s => GraftLongList.deserialize(s._1)).toArray))
 
-    // 1. fold filters pairwise where kind+geometry allow; unmergeable pairs
-    //    (cuckoo saturation / geometry drift) are kept side by side
+    // 1. fold Blooms pairwise where geometry and load allow
     val filters = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Long)]
     filterSegs.foreach { case (bytes, n) =>
       var i = 0
       var placed = false
       while (!placed && i < filters.length) {
-        tryMergeFilters(filters(i)._1, bytes) match {
+        tryMergeBlooms(filters(i)._1, bytes) match {
           case Some(m) => filters(i) = (m, filters(i)._2 + n); placed = true
           case None => i += 1
         }
@@ -279,150 +191,70 @@ object SeenSegments {
       if (!placed) filters += ((bytes, n))
     }
 
-    if (filters.isEmpty) segsFromKeys(keys, kind, expectedPerSegment, fpp)
+    if (filters.isEmpty) segsFromKeys(keys, expectedPerSegment, fpp)
     else if (keys.isEmpty) filters.toSeq
-    else {
-      // 2. fold the delta keys into the first (largest-capacity-first is not
-      //    needed: all same configured geometry) filter — but NEVER past a
-      //    Bloom's design capacity: unlike cuckoo (whose failed inserts
-      //    surface as overflow), Bloom inserts silently saturate bits, and
-      //    once itemsInserted ≫ expected the segment's FPR walks toward 1 —
-      //    every candidate then takes the exact-confirm anti-join against
-      //    the 10^10-row frontier and the pre-screen is dead weight
-      //    (round-5 review). When the fold would overfill, the keys become
-      //    their own segment(s) instead: the probe already ORs a
-      //    partition's whole stack, so correctness is unchanged and each
-      //    segment keeps its configured fpp; a partition converges to
-      //    ~⌈keys/expected⌉ full filters + one partial (the pairwise merge
-      //    in step 1 keeps gluing undersized siblings back together).
-      if (bloomHeadroom(filters.head._1) >= keys.length) {
-        val (folded, overflow) = insertKeysInto(filters.head._1, keys)
-        val out = scala.collection.mutable.ArrayBuffer[(Array[Byte], Long)](
-          (folded, filters.head._2 + (keys.length - overflow.length)))
-        out ++= filters.drop(1)
-        // cuckoo saturation spill: a standalone EXACT list (the next
-        // compaction's pure-list rule converts it if it outgrows a filter)
-        if (overflow.nonEmpty)
-          out += ((GraftLongList.serialize(overflow), overflow.length.toLong))
-        out.toSeq
-      } else filters.toSeq ++ segsFromKeys(keys, kind, expectedPerSegment, fpp)
-    }
+    // 2. fold the delta keys into the first Bloom — but NEVER past its
+    //    design capacity: Bloom inserts silently saturate bits, and once
+    //    itemsInserted ≫ expected the segment's FPR walks toward 1 and every
+    //    candidate takes the exact-confirm path. When the fold would
+    //    overfill, the keys become their own segment(s) instead: the probe
+    //    ORs a partition's whole stack, so correctness is unchanged and each
+    //    segment keeps its configured fpp; a partition converges to
+    //    ~⌈keys/expected⌉ full filters + one partial (step 1 keeps gluing
+    //    undersized siblings back together).
+    else if (bloomHeadroom(filters.head._1) >= keys.length) {
+      val f = GraftBloomFilter.deserialize(filters.head._1)
+      keys.foreach(f.insert)
+      (f.serialized, filters.head._2 + keys.length) +: filters.drop(1).toSeq
+    } else filters.toSeq ++ segsFromKeys(keys, expectedPerSegment, fpp)
   }
 
   /** Segment(s) for a raw key set with no target filter: an exact list
-    * while that is the smaller (and zero-FPR) representation, else filters
-    * at the configured geometry. */
+    * while that is the smaller (and zero-FPR) representation, else a Bloom
+    * sized max(expectedPerSegment, keys). */
   private def segsFromKeys(
       keys: Array[Long],
-      kind: String,
       expectedPerSegment: Long,
       fpp: Double): Seq[(Array[Byte], Long)] =
     if (keys.isEmpty) Seq.empty
+    else if (8L + 8L * keys.length <= bloomBytes(expectedPerSegment, fpp))
+      Seq((GraftLongList.serialize(keys), keys.length.toLong))
     else {
-      val listBytes = 8L + 8L * keys.length
-      if (listBytes <= filterBytesFor(kind, expectedPerSegment, fpp))
-        Seq((GraftLongList.serialize(keys), keys.length.toLong))
-      else buildFilterFromKeys(keys, kind, expectedPerSegment, fpp)
+      val f = GraftBloomFilter.forExpected(math.max(expectedPerSegment, keys.length.toLong), fpp)
+      keys.foreach(f.insert)
+      Seq((f.serialized, keys.length.toLong))
     }
 
-  /** Design capacity of a serialized BLOOM segment — read directly from
-    * the v3 header (round-5 advisor: deriving it as m·ln2/k is exact only
-    * at optimal sizing; a filter created with a clamped/rounded k
-    * self-reported a capacity above its real design n, so the overfill
-    * gate could still push FPR past the configured fpp). Header layout:
-    * magic(4) k(4) numBits(8) itemsInserted(8) designCapacity(8). */
-  private def bloomCapacity(bytes: Array[Byte]): Long =
-    math.max(1L, java.nio.ByteBuffer.wrap(bytes, 24, 8).getLong)
+  /** Serialized size of a fresh Bloom at the configured geometry — the
+    * list→filter conversion threshold in [[compactStack]]. */
+  private def bloomBytes(expectedPerSegment: Long, fpp: Double): Long =
+    GraftBloomFilter.HeaderBytes.toLong +
+      ((GraftBloomFilter.optimalNumBits(expectedPerSegment, fpp) + 63L) >>> 6) * 8L
 
-  /** Remaining insert capacity of a serialized BLOOM segment before it
-    * exceeds its design load (fixed header offsets — no word-array copy).
-    * Non-bloom segments have their own overflow handling and report
-    * unlimited headroom here. */
+  /** Items inserted into a serialized Bloom, read from its v3 header
+    * (magic(4) k(4) numBits(8) itemsInserted(8) designCapacity(8)) without
+    * copying the word array. */
+  private def bloomItems(bytes: Array[Byte]): Long = java.nio.ByteBuffer.wrap(bytes).getLong(16)
+
+  /** Remaining insert capacity of a serialized Bloom before it exceeds its
+    * design load. The design capacity is read from the header, not derived
+    * as m·ln2/k (exact only at optimal sizing: a filter created with a
+    * clamped/rounded k would over-report its capacity). */
   private def bloomHeadroom(bytes: Array[Byte]): Long =
-    if (magicOf(bytes) != GraftBloomFilter.Magic) Long.MaxValue
-    else math.max(0L, bloomCapacity(bytes) - java.nio.ByteBuffer.wrap(bytes, 16, 8).getLong)
+    math.max(0L, math.max(1L, java.nio.ByteBuffer.wrap(bytes).getLong(24)) - bloomItems(bytes))
 
-  /** Merge two serialized FILTER segments when kind+geometry allow; None
-    * when they must stay separate (mixed kinds, geometry drift, or a cuckoo
-    * merge that would drop fingerprints — mergeInPlace is atomic on
-    * failure, so `a` is untouched when this returns None). */
-  private def tryMergeFilters(a: Array[Byte], b: Array[Byte]): Option[Array[Byte]] =
-    (magicOf(a), magicOf(b)) match {
-      case (GraftBloomFilter.Magic, GraftBloomFilter.Magic) =>
-        // same-capacity gate as the delta fold: OR-merging two well-loaded
-        // Blooms doubles the bit density and degrades FPR quadratically —
-        // siblings past the combined design load stay side by side (the
-        // probe ORs the stack), exactly like unmergeable cuckoo pairs
-        if (bloomHeadroom(a) < java.nio.ByteBuffer.wrap(b, 16, 8).getLong) None
-        else {
-          val fa = GraftBloomFilter.deserialize(a)
-          val fb = GraftBloomFilter.deserialize(b)
-          if (fa.numBits == fb.numBits && fa.numHashes == fb.numHashes)
-            Some(fa.mergeInPlace(fb).serialized)
-          else None
-        }
-      case (GraftCuckooFilter.Magic, GraftCuckooFilter.Magic) =>
-        val fa = GraftCuckooFilter.deserialize(a)
-        val fb = GraftCuckooFilter.deserialize(b)
-        if (fa.log2Buckets == fb.log2Buckets && fa.mergeInPlace(fb) == 0L) Some(fa.serialized)
-        else None
-      case _ => None
-    }
-
-  /** Re-insert raw keys into a serialized filter; returns the new blob plus
-    * the keys that could not be placed (always empty for Bloom). */
-  private def insertKeysInto(filterBytes: Array[Byte], keys: Array[Long]): (Array[Byte], Array[Long]) =
-    magicOf(filterBytes) match {
-      case GraftBloomFilter.Magic =>
-        val f = GraftBloomFilter.deserialize(filterBytes)
-        keys.foreach(f.insert)
-        (f.serialized, Array.emptyLongArray)
-      case GraftCuckooFilter.Magic =>
-        val f = GraftCuckooFilter.deserialize(filterBytes)
-        val overflow = scala.collection.mutable.ArrayBuffer.empty[Long]
-        keys.foreach(k => if (!f.insert(k)) overflow += k)
-        (f.serialized, overflow.toArray)
-      case m => throw new IllegalArgumentException(f"not a filter segment (magic 0x$m%08x)")
-    }
-
-  /** Fresh filter from raw keys, sized max(expectedPerSegment, keys) so the
-    * conversion itself can never saturate a cuckoo mid-build; any residual
-    * cuckoo overflow (pathological kick chains) still spills to a list. */
-  private def buildFilterFromKeys(
-      keys: Array[Long],
-      kind: String,
-      expectedPerSegment: Long,
-      fpp: Double): Seq[(Array[Byte], Long)] = {
-    val n = math.max(expectedPerSegment, keys.length.toLong)
-    kind match {
-      case "bloom" =>
-        val bits = GraftBloomFilter.optimalNumBits(n, fpp)
-        val f = GraftBloomFilter.create(bits, GraftBloomFilter.optimalNumHashes(n, bits), n)
-        keys.foreach(f.insert)
-        Seq((f.serialized, keys.length.toLong))
-      case "cuckoo" =>
-        val f = GraftCuckooFilter.create(GraftCuckooFilter.log2BucketsForExpected(n))
-        val overflow = scala.collection.mutable.ArrayBuffer.empty[Long]
-        keys.foreach(k => if (!f.insert(k)) overflow += k)
-        val out = scala.collection.mutable.ArrayBuffer[(Array[Byte], Long)](
-          (f.serialized, (keys.length - overflow.length).toLong))
-        if (overflow.nonEmpty) out += ((GraftLongList.serialize(overflow.toArray), overflow.length.toLong))
-        out.toSeq
-      case other => throw new IllegalArgumentException(s"unknown seen-set kind: $other")
-    }
-  }
-
-  /** Serialized size of a fresh filter of the configured kind/geometry —
-    * the list→filter conversion threshold in [[compactStack]]. */
-  private[seen] def filterBytesFor(kind: String, expectedPerSegment: Long, fpp: Double): Long =
-    kind match {
-      case "bloom" =>
-        val bits = GraftBloomFilter.optimalNumBits(expectedPerSegment, fpp)
-        GraftBloomFilter.HeaderBytes.toLong + ((bits + 63L) >>> 6) * 8L
-      case "cuckoo" =>
-        val lg = GraftCuckooFilter.log2BucketsForExpected(expectedPerSegment)
-        4L + 4L + 8L + (1L << lg) * GraftCuckooFilter.SlotsPerBucket * 2L
-      case other => throw new IllegalArgumentException(s"unknown seen-set kind: $other")
+  /** OR-merge two serialized Blooms when geometry allows and the result
+    * stays within the target's design load; None when they must stay side
+    * by side. OR-merging two well-loaded Blooms doubles the bit density and
+    * degrades FPR quadratically, so the same-capacity gate as the delta
+    * fold applies. */
+  private def tryMergeBlooms(a: Array[Byte], b: Array[Byte]): Option[Array[Byte]] =
+    if (bloomHeadroom(a) < bloomItems(b)) None
+    else {
+      val fa = GraftBloomFilter.deserialize(a)
+      val fb = GraftBloomFilter.deserialize(b)
+      if (fa.numBits == fb.numBits && fa.numHashes == fb.numHashes) Some(fa.mergeInPlace(fb).serialized)
+      else None
     }
 
   // Column API
@@ -430,15 +262,6 @@ object SeenSegments {
     ExpressionUtils.column(
       BloomBuildAgg(ExpressionUtils.expression(urlHash), numBits, numHashes, designCapacity)
         .toAggregateExpression())
-
-  def cuckoo_build(urlHash: Column, log2Buckets: Int): Column =
-    ExpressionUtils.column(
-      CuckooBuildAgg(ExpressionUtils.expression(urlHash), log2Buckets)
-        .toAggregateExpression())
-
-  def filter_might_contain(segment: Column, urlHash: Column): Column =
-    ExpressionUtils.column(
-      FilterMightContain(ExpressionUtils.expression(segment), ExpressionUtils.expression(urlHash)))
 
   def seen_probe(
       urlHash: Column,

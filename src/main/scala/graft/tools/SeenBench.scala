@@ -52,7 +52,7 @@ object SeenBench {
     //    path; segment bytes then exceed the 256 MB broadcast gate)
     val (segBytes, tCompact) = time {
       val merged = SeenSet.mergeSegments(
-        SeenSet.emptySegments(spark), deltaDf.as[SeenSet.Segment], "bloom", expected).persist()
+        SeenSet.emptySegments(spark), deltaDf.as[SeenSet.Segment], expected).persist()
       val bytes = merged.agg(sum(length(col("segment")))).head().getLong(0)
       merged.createOrReplaceTempView("seen_segments")
       bytes

@@ -1,45 +1,59 @@
 package graft.tools
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Encoders, SparkSession}
 
+import graft.lake.CrawlLake
 import graft.model.FrontierEntry
 import graft.seen.SeenSet
 
 /** One-shot seen-set rebuild from the exact frontier — the migration path
-  * for lakes whose seen segments use a retired serialization format (the
-  * v1→v2 hash-layout fix and the v2→v3 capacity-header fix both hard-fail
-  * old blobs at probe time with a pointer here; round-5 advisor: the error
-  * suggested a manual rebuild but nothing executable existed).
+  * for lakes whose seen segments use a format this build cannot read (the
+  * seen set's format gate fails such blobs at probe and compaction time
+  * with a pointer here).
   *
   * The frontier is the seen set's exact source of truth (every admitted
   * url_hash has exactly one frontier row), so a rebuild is lossless:
-  * fresh delta segments from `frontier.url_hash` at the CURRENT build's
-  * format replace the `seen` table in one atomic commit. Run it with the
-  * same seenPartitions / expectedPerSegment / kind the crawl uses.
+  * fresh Bloom segments from `frontier.url_hash` at the CURRENT build's
+  * format replace the `seen` table in one atomic commit. The lake is opened
+  * with the crawl layout ([[CrawlLake.forCrawl]]), whose frontier is a
+  * bucketed table; run it with the seenPartitions / expectedPerSegment /
+  * bucket count the crawl uses.
   *
-  * Usage: runMain graft.tools.SeenRebuild <lakeDir> [P] [expectedPerSegment] [kind]
+  * Usage: runMain graft.tools.SeenRebuild <lakeDir> [P] [expectedPerSegment] [buckets]
   */
 object SeenRebuild {
   def main(args: Array[String]): Unit = {
     val lakeDir = args(0)
     val p = args.lift(1).map(_.toInt).getOrElse(SeenSet.DefaultPartitions)
     val expectedPerSegment = args.lift(2).map(_.toLong).getOrElse(1L << 16)
-    val kind = args.lift(3).getOrElse("bloom")
+    val buckets = args.lift(3).map(_.toInt).getOrElse(32) // CrawlLake.forCrawl's default
 
     val spark = graft.GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val lake = graft.lake.CrawlLake(lakeDir, spark)
+    val snap = rebuild(spark, lakeDir, p, expectedPerSegment, buckets)
+    println(s"""{"tool":"seen_rebuild","snapshot":$snap,"p":$p,"buckets":$buckets}""")
+    spark.stop()
+  }
+
+  /** Replace the `seen` table of the crawl lake at `lakeDir` with segments
+    * rebuilt from its frontier, and re-record `seen_meta.json` so the
+    * driver's resume drift guard matches. Returns the new snapshot id; the
+    * commit takes the next batch id, so the crawl's next tick is one batch
+    * later than it would have been. */
+  def rebuild(
+      spark: SparkSession,
+      lakeDir: String,
+      p: Int,
+      expectedPerSegment: Long,
+      buckets: Int): Long = {
+    val lake = CrawlLake.forCrawl(lakeDir, spark, buckets)
     val frontier = lake.read("frontier", Encoders.product[FrontierEntry].schema)
-    val segments = SeenSet.buildDeltaSegments(
-      frontier.select("url_hash"), p, expectedPerSegment, kind = kind)
+    val segments = SeenSet.buildDeltaSegments(frontier.select("url_hash"), p, expectedPerSegment)
     val batchId = lake.latestSnapshotId.map(id => lake.batchIdOf(id) + 1).getOrElse(0L)
     val snap = lake.commit(batchId, appends = Map.empty, replaces = Map("seen" -> segments.toDF()))
-    // re-record the geometry meta so the resume drift guard matches
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(lakeDir, "seen_meta.json"),
-      s"""{"p":$p,"kind":"$kind"}""")
-    println(s"""{"tool":"seen_rebuild","snapshot":$snap,"p":$p,"kind":"$kind"}""")
-    spark.stop()
+      java.nio.file.Paths.get(lakeDir, "seen_meta.json"), s"""{"p":$p}""")
+    snap
   }
 }

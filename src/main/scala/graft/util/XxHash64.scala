@@ -5,7 +5,7 @@ package graft.util
   *
   * One hash implementation is shared by every layer of the engine — the
   * Catalyst expression (`graft.functions.CanonicalUrlHash`), the driver-side
-  * simulator (`graft.sim.ReferenceSimulator`), and the Bloom/cuckoo seen-set —
+  * simulator (`graft.sim.ReferenceSimulator`), and the Bloom seen set —
   * so `url_hash` is consistent everywhere by construction. Seed 42 matches
   * Spark's built-in `xxhash64()` column function, which is used as a
   * correctness oracle in the test suite.

@@ -174,17 +174,6 @@ class CrawlDriverSpec extends AnyFunSuite {
     assert(engineTick2Hashes == refHashes)
   }
 
-  test("cuckoo seen-set variant crawls identically to bloom") {
-    val bloomCfg = CrawlConfig(budget = 2, seenPartitions = 8, expectedPerSegment = 4096)
-    val cuckooCfg = bloomCfg.copy(seenKind = "cuckoo")
-    val (dBloom, _) = newDriver(bloomCfg)
-    dBloom.init(PageSynth.seeds(N, 3)); dBloom.run(3)
-    val (dCuckoo, _) = newDriver(cuckooCfg)
-    dCuckoo.init(PageSynth.seeds(N, 3)); dCuckoo.run(3)
-    assert(engineOrder(dBloom) == engineOrder(dCuckoo))
-    assert(dBloom.frontier.count() == dCuckoo.frontier.count())
-  }
-
   test("crawl_delay tightens the per-host budget; engine matches the oracle") {
     // host0's entry overridden with a 30 s delay -> floor(60/30) = 2/tick
     val slowRobots = robotsEntries.map { e =>

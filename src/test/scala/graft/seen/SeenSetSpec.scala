@@ -2,7 +2,6 @@ package graft.seen
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,92 +37,6 @@ class GraftBloomFilterSpec extends AnyFunSuite {
       SeenSegments.merge(a.serialized, b.serialized))
     keys.take(1000).foreach(k => assert(merged.mightContain(k)))
     assert(merged.itemsInserted == 1000)
-  }
-}
-
-class GraftCuckooFilterSpec extends AnyFunSuite {
-
-  private val keys = (0L until 10000L).map(i => XxHash64.hashLong(i, 7L))
-
-  test("insert/lookup: no false negatives below load limit") {
-    val f = GraftCuckooFilter.forExpected(10000)
-    keys.foreach(k => assert(f.insert(k), s"insert failed for $k"))
-    keys.foreach(k => assert(f.mightContain(k)))
-  }
-
-  test("low false-positive rate (~1e-4 for 16-bit fingerprints)") {
-    val f = GraftCuckooFilter.forExpected(10000)
-    keys.foreach(f.insert)
-    val probes = (0L until 50000L).map(i => XxHash64.hashLong(i + 9000000L, 29L))
-    val fp = probes.count(f.mightContain)
-    assert(fp < 50000 * 2e-3, s"fp=$fp")
-  }
-
-  test("delete removes without disturbing others") {
-    val f = GraftCuckooFilter.forExpected(1000)
-    keys.take(1000).foreach(f.insert)
-    keys.take(100).foreach(k => assert(f.delete(k)))
-    keys.slice(100, 1000).foreach(k => assert(f.mightContain(k), s"lost $k"))
-  }
-
-  test("serialization roundtrip + merge by re-insert") {
-    val a = GraftCuckooFilter.forExpected(2000)
-    val b = GraftCuckooFilter.forExpected(2000)
-    keys.take(500).foreach(a.insert)
-    keys.slice(500, 1000).foreach(b.insert)
-    val merged = GraftCuckooFilter.deserialize(SeenSegments.merge(a.serialized, b.serialized))
-    keys.take(1000).foreach(k => assert(merged.mightContain(k)))
-  }
-
-  test("determinism: same insert order, same serialized bytes") {
-    val a = GraftCuckooFilter.forExpected(5000)
-    val b = GraftCuckooFilter.forExpected(5000)
-    keys.take(5000).foreach(a.insert)
-    keys.take(5000).foreach(b.insert)
-    assert(a.serialized.sameElements(b.serialized))
-  }
-
-  test("keys sharing low bits fill to sized capacity (segment-sharded keys)") {
-    // SeenSet shards by pmod(url_hash, P): every key in a segment shares its
-    // low log2(P) bits. With bucket1 = raw low bits this saturated at ~1/P of
-    // capacity; with an independent bucket hash it must reach the sized load.
-    val n = 4096
-    val f = GraftCuckooFilter.forExpected(n.toLong)
-    val shared = (0 until n).map(i => (i.toLong << 12) | 0x5L) // low 12 bits identical
-    shared.foreach(k => assert(f.insert(k), s"saturated early at ${f.itemsInserted}/$n"))
-    shared.foreach(k => assert(f.mightContain(k)))
-  }
-
-  test("failed insert is atomic: no previously-inserted key is lost") {
-    val f = GraftCuckooFilter.create(2) // 4 buckets x 4 slots = 16 capacity
-    val inserted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var k = 0L
-    var full = false
-    while (!full && k < 1000) {
-      val key = XxHash64.hashLong(k, 99L)
-      if (f.insert(key)) inserted += key else full = true
-      k += 1
-    }
-    assert(full, "expected the 16-slot filter to saturate")
-    // further failed inserts must leave the table bit-identical (some
-    // attempts may still succeed — snapshot before each one)
-    (1000L until 1040L).foreach { i =>
-      val key = XxHash64.hashLong(i, 99L)
-      val snap = f.serialized
-      if (!f.insert(key)) assert(f.serialized.sameElements(snap))
-    }
-    inserted.foreach(key => assert(f.mightContain(key), s"false negative for $key after saturation"))
-  }
-
-  test("failed merge is atomic: target restored on overflow") {
-    val a = GraftCuckooFilter.create(2)
-    val b = GraftCuckooFilter.create(2)
-    (0L until 12L).foreach(i => a.insert(XxHash64.hashLong(i, 1L)))
-    (100L until 112L).foreach(i => b.insert(XxHash64.hashLong(i, 2L)))
-    val before = a.serialized
-    val failed = a.mergeInPlace(b) // 24 fps into 16 slots must fail
-    assert(failed > 0)
-    assert(a.serialized.sameElements(before), "target mutated by failed merge")
   }
 }
 
@@ -186,15 +99,6 @@ class SeenSetSpec extends AnyFunSuite {
     assert(cogroupPlan.collect().map(_.url_hash).sorted.toSeq == newHashes.take(100).sorted.toSeq)
   }
 
-  test("cuckoo segments work through the same path") {
-    val p = 4
-    val seenDf = seenHashes.toDF("url_hash")
-    val segments = SeenSet.buildDeltaSegments(seenDf, p, expectedPerSegment = 2048, kind = "cuckoo")
-    val candidates = spark.createDataset(newHashes.take(200).map(fe))
-    val out = SeenSet.filterNewFiltered(candidates, segments, seenDf, p).collect()
-    assert(out.map(_.url_hash).sorted.toSeq == newHashes.take(200).sorted.toSeq)
-  }
-
   test("mergeSegments: probe over merged ≡ probe over union") {
     val p = 8
     val segA = SeenSet.buildDeltaSegments(seenHashes.take(1500).toDF("url_hash"), p, 1024)
@@ -206,20 +110,6 @@ class SeenSetSpec extends AnyFunSuite {
       val pid = math.floorMod(h, p.toLong).toInt
       assert(probes(pid)(h), s"false negative after merge: $h")
     }
-  }
-
-  test("filter_might_contain column fn probes segments") {
-    val segs = SeenSet.buildDeltaSegments(seenHashes.toDF("url_hash"), 1, 4096)
-    val segBytes = segs.collect().head.segment
-    val df = (seenHashes.take(100) ++ newHashes.take(100)).toDF("url_hash")
-    val got = df
-      .withColumn("hit", SeenSegments.filter_might_contain(lit(segBytes), $"url_hash"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1))
-      .toMap
-    seenHashes.take(100).foreach(h => assert(got(h), "bloom false negative"))
-    val fps = newHashes.take(100).count(got(_))
-    assert(fps <= 3, s"implausible fp count $fps")
   }
 
   test("long-list delta segments: probe + merge dispatch across kinds") {
@@ -238,10 +128,6 @@ class SeenSetSpec extends AnyFunSuite {
         val p = SeenSegments.probeFn(b)
         assert(p(42L) && p(1L) && p(5L) && p(9L))
       }
-    val cuckoo = GraftCuckooFilter.forExpected(100)
-    cuckoo.insert(42L)
-    val cl = SeenSegments.merge(cuckoo.serialized, blob)
-    assert(SeenSegments.probeFn(cl)(42L) && SeenSegments.probeFn(cl)(9L))
   }
 
   test("filterNewFiltered is exact over mixed filter + delta-list segments") {
@@ -274,7 +160,7 @@ class SeenSetSpec extends AnyFunSuite {
     val out = SeenSegments.compactStack(
       Seq((GraftLongList.serialize(Array(1L, 2L, 3L)), 3L),
         (GraftLongList.serialize(Array(9L)), 1L)),
-      "bloom", expectedPerSegment = 1024)
+      expectedPerSegment = 1024)
     assert(out.size == 1 && magic(out.head._1) == GraftLongList.Magic)
     val p = SeenSegments.probeFn(out.head._1)
     assert(p(1L) && p(2L) && p(3L) && p(9L) && !p(4L))
@@ -284,33 +170,13 @@ class SeenSetSpec extends AnyFunSuite {
     // round-2 advisor item 1: partitions never seeded with a filter used to
     // accumulate raw 8 B/key lists forever
     val keys = (0L until 4000L).map(i => XxHash64.hashLong(i, 77L)).toArray
-    for (kind <- Seq("bloom", "cuckoo")) {
-      val out = SeenSegments.compactStack(
-        Seq((GraftLongList.serialize(keys), keys.length.toLong)), kind, expectedPerSegment = 1024)
-      val expectedMagic = if (kind == "bloom") GraftBloomFilter.Magic else GraftCuckooFilter.Magic
-      assert(magic(out.head._1) == expectedMagic, s"$kind did not convert")
-      // strictly smaller than the list it replaced, and every key still hits
-      assert(out.map(_._1.length.toLong).sum < 8L + 8L * keys.length)
-      val probes = out.map(s => SeenSegments.probeFn(s._1))
-      keys.foreach(k => assert(probes.exists(_(k)), s"$kind lost $k in conversion"))
-    }
-  }
-
-  test("compactStack: cuckoo saturation spills to a list segment, never throws") {
-    // round-2 advisor item 2: a saturated cuckoo partition must not hard-stop
-    // the crawl at every subsequent compact tick
-    val tiny = GraftCuckooFilter.create(2) // 16 slots
-    (0L until 14L).foreach(i => tiny.insert(XxHash64.hashLong(i, 5L)))
-    val delta = (100L until 200L).map(i => XxHash64.hashLong(i, 5L)).toArray
     val out = SeenSegments.compactStack(
-      Seq((tiny.serialized, 14L), (GraftLongList.serialize(delta), delta.length.toLong)),
-      "cuckoo", expectedPerSegment = 16)
-    assert(out.size >= 2, s"expected filter + overflow list, got ${out.size}")
-    assert(out.exists(s => magic(s._1) == GraftCuckooFilter.Magic))
-    assert(out.exists(s => magic(s._1) == GraftLongList.Magic))
+      Seq((GraftLongList.serialize(keys), keys.length.toLong)), expectedPerSegment = 1024)
+    assert(magic(out.head._1) == GraftBloomFilter.Magic, "did not convert")
+    // strictly smaller than the list it replaced, and every key still hits
+    assert(out.map(_._1.length.toLong).sum < 8L + 8L * keys.length)
     val probes = out.map(s => SeenSegments.probeFn(s._1))
-    ((0L until 14L) ++ (100L until 200L)).map(XxHash64.hashLong(_, 5L))
-      .foreach(k => assert(probes.exists(_(k)), s"lost $k across spill"))
+    keys.foreach(k => assert(probes.exists(_(k)), s"lost $k in conversion"))
   }
 
   test("compactStack: a bloom at design capacity is never overfilled — keys stack beside it") {
@@ -323,7 +189,7 @@ class SeenSetSpec extends AnyFunSuite {
     val delta = (5000L until 5512L).map(XxHash64.hashLong(_, 11L)).toArray
     val out = SeenSegments.compactStack(
       Seq((full.serialized, expected), (GraftLongList.serialize(delta), delta.length.toLong)),
-      "bloom", expectedPerSegment = expected)
+      expectedPerSegment = expected)
     assert(out.size == 2, s"expected full filter + stacked keys, got ${out.size}")
     val bloomSeg = out.find(s => magic(s._1) == GraftBloomFilter.Magic).get
     // the full filter is byte-identical (untouched) and keeps its count
@@ -338,7 +204,7 @@ class SeenSetSpec extends AnyFunSuite {
     val out2 = SeenSegments.compactStack(
       Seq((half.serialized, expected / 4),
         (GraftLongList.serialize(delta), delta.length.toLong)),
-      "bloom", expectedPerSegment = expected)
+      expectedPerSegment = expected)
     assert(out2.size == 1 && magic(out2.head._1) == GraftBloomFilter.Magic)
   }
 
@@ -350,11 +216,11 @@ class SeenSetSpec extends AnyFunSuite {
     }
     val outFull = SeenSegments.compactStack(
       Seq((filled(1000, 1L).serialized, 1000L), (filled(1000, 2L).serialized, 1000L)),
-      "bloom", 1024)
+      1024)
     assert(outFull.size == 2, "OR-merging two near-full blooms would double bit density")
     val outSmall = SeenSegments.compactStack(
       Seq((filled(300, 1L).serialized, 300L), (filled(300, 2L).serialized, 300L)),
-      "bloom", 1024)
+      1024)
     assert(outSmall.size == 1, "undersized same-geometry siblings must still merge")
   }
 
@@ -383,32 +249,45 @@ class SeenSetSpec extends AnyFunSuite {
     val a = GraftBloomFilter.forExpected(1000, 1e-3); a.insert(1L)
     val b = GraftBloomFilter.forExpected(5000, 1e-3); b.insert(2L)
     val out = SeenSegments.compactStack(
-      Seq((a.serialized, 1L), (b.serialized, 1L)), "bloom", 1024)
+      Seq((a.serialized, 1L), (b.serialized, 1L)), 1024)
     assert(out.size == 2)
     val probes = out.map(s => SeenSegments.probeFn(s._1))
     assert(probes.exists(_(1L)) && probes.exists(_(2L)))
   }
 
-  test("mergeSegments with cuckoo kind folds oversized deltas without failing the tick") {
-    val p = 2
-    val existing = SeenSet.buildDeltaSegments(
-      seenHashes.take(64).toDF("url_hash"), p, expectedPerSegment = 32, kind = "cuckoo")
-    val delta = SeenSet.buildDeltaList(seenHashes.slice(64, 1064).toDF("url_hash"), p)
-    val merged = SeenSet.mergeSegments(existing, delta, "cuckoo", expectedPerSegment = 32).collect()
-    val byPid = merged.groupBy(_.partition_id)
-    seenHashes.take(1064).foreach { h =>
-      val pid = math.floorMod(h, p.toLong).toInt
-      assert(byPid(pid).exists(s => SeenSegments.probeFn(s.segment)(h)), s"lost $h")
+  test("unreadable formats GBLM, GBL2, GCKF, GCK2 fail loudly in probe and merge") {
+    // retired Bloom layouts and the removed cuckoo filter: one gate, one
+    // message naming the rebuild tool — never a silent wrong probe, and
+    // never carried through a compaction that has no delta keys to fold
+    val good = GraftBloomFilter.forExpected(100, 1e-3)
+    good.insert(2L)
+    val ok = spark.createDataset(Seq(SeenSet.Segment(0, good.serialized, 1L)))
+    for (name <- Seq("GBLM", "GBL2", "GCKF", "GCK2")) {
+      val blob = good.serialized
+      java.nio.ByteBuffer.wrap(blob).put(name.getBytes("US-ASCII"))
+      val e = intercept[IllegalArgumentException](SeenSegments.probeFn(blob))
+      assert(e.getMessage.contains(name) && e.getMessage.contains("graft.tools.SeenRebuild"),
+        e.getMessage)
+      val bad = spark.createDataset(Seq(SeenSet.Segment(0, blob, 1L)))
+      for ((existing, delta) <- Seq((bad, SeenSet.emptySegments(spark)), (ok, bad))) {
+        val err = intercept[Exception](SeenSet.mergeSegments(existing, delta, 1024L).collect())
+        val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains(name) && m.contains("graft.tools.SeenRebuild")),
+          s"$name: ${err.getMessage}")
+      }
     }
   }
 
-  test("retired v1 cuckoo layout is rejected loudly") {
-    val blob = GraftCuckooFilter.forExpected(100).serialized
-    val bb = java.nio.ByteBuffer.wrap(blob)
-    bb.putInt(0, GraftCuckooFilter.MagicV1)
-    val e1 = intercept[IllegalArgumentException](GraftCuckooFilter.deserialize(blob))
-    assert(e1.getMessage.contains("retired"))
-    intercept[IllegalArgumentException](SeenSegments.probeFn(blob))
+  test("the kind-taking mergeSegments accepts only bloom and forwards unchanged") {
+    val p = 4
+    val segA = SeenSet.buildDeltaSegments(seenHashes.take(1500).toDF("url_hash"), p, 1024)
+    val delta = SeenSet.buildDeltaList(seenHashes.drop(1500).toDF("url_hash"), p)
+    def bytes(ds: org.apache.spark.sql.Dataset[SeenSet.Segment]) =
+      ds.collect().sortBy(_.partition_id).map(s => (s.partition_id, s.segment.toSeq, s.n_items)).toSeq
+    @annotation.nowarn("cat=deprecation")
+    def viaKind(kind: String) = SeenSet.mergeSegments(segA, delta, kind, 1024L)
+    assert(bytes(viaKind("bloom")) == bytes(SeenSet.mergeSegments(segA, delta, 1024L)))
+    intercept[IllegalArgumentException](viaKind("cuckoo"))
   }
 
   test("property: random hash sets never produce false negatives (scalacheck gen)") {

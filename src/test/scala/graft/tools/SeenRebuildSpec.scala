@@ -1,0 +1,70 @@
+package graft.tools
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+import graft.crawl.{CrawlConfig, CrawlDriver}
+import graft.lake.CrawlLake
+import graft.seen.{SeenSegments, SeenSet}
+import graft.synth.PageSynth
+
+class SeenRebuildSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val N = 150L
+  private val Buckets = 8
+  private lazy val corpus = PageSynth.pages(N)
+  private val cfg = CrawlConfig(budget = 2, seenPartitions = 8, expectedPerSegment = 4096)
+
+  private def driver(lake: CrawlLake): CrawlDriver =
+    new CrawlDriver(spark, lake, spark.createDataFrame(corpus.map(_.page)),
+      spark.createDataset(PageSynth.robots()), cfg)
+
+  /** Crawl order as per-tick (url_hash, status) sequences, tick by tick. The
+    * rebuild commit takes a batch id of its own, so batch ids after it are
+    * shifted by one; the ticks and their order within are what must match. */
+  private def ticks(d: CrawlDriver): Seq[Seq[(Long, Int)]] =
+    d.crawlOrder().select("batch_id", "url_hash", "status").as[(Long, Long, Int)].collect().toSeq
+      .groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(r => (r._2, r._3)))
+
+  test("rebuild of a bucketed crawl lake keeps every frontier hash and the crawl order") {
+    val refLake = CrawlLake.forCrawl(Files.createTempDirectory("graft-rebuild-ref").toString, spark, Buckets)
+    val lake = CrawlLake.forCrawl(Files.createTempDirectory("graft-rebuild").toString, spark, Buckets)
+    val straight = driver(refLake)
+    val before = driver(lake)
+    try {
+      straight.init(PageSynth.seeds(N, 3))
+      straight.run(4)
+      before.init(PageSynth.seeds(N, 3))
+      before.run(2)
+
+      SeenRebuild.rebuild(spark, lake.root, cfg.seenPartitions, cfg.expectedPerSegment, Buckets)
+
+      val frontierHashes = before.frontier.select("url_hash").as[Long].collect()
+      assert(frontierHashes.length > 10, "mid-crawl frontier should hold the seeds and more")
+      val probes = lake.read("seen", Encoders.product[SeenSet.Segment].schema).as[SeenSet.Segment]
+        .collect().groupBy(_.partition_id)
+        .map { case (pid, segs) => pid -> segs.map(s => SeenSegments.probeFn(s.segment)) }
+      frontierHashes.foreach { h =>
+        val pid = math.floorMod(h, cfg.seenPartitions.toLong).toInt
+        assert(probes.getOrElse(pid, Array.empty[Long => Boolean]).exists(_(h)),
+          s"rebuilt seen set misses frontier hash $h")
+      }
+
+      val after = driver(CrawlLake.forCrawl(lake.root, spark, Buckets))
+      try {
+        after.run(2)
+        val dupKeys = after.frontier.groupBy("url_hash").count().where(col("count") > 1).count()
+        assert(dupKeys == 0L, s"$dupKeys url_hash keys have more than one frontier row")
+        assert(ticks(after) == ticks(straight))
+      } finally after.close()
+    } finally {
+      straight.close(); before.close(); refLake.drop(); lake.drop()
+    }
+  }
+}
