@@ -80,14 +80,7 @@ final case class CrawlConfig(
       * ticks, bounding read-side file counts over long crawls (0 = off —
       * the Iceberg-rewrite-style maintenance is an explicit choice, like
       * running expire-snapshots). */
-    lakeCompactEvery: Int = 0,
-    /** storage level for the per-tick `processed` working set (the small
-      * scheduled/fresh sets use localCheckpoint — see runBatch).
-      * MEMORY_AND_DISK for small batches; DISK_ONLY (with spark.local.dir
-      * on fast storage) when a tick's fetched pages exceed executor
-      * memory — at 100 TB scale the fetch join output never fits on-heap. */
-    persistLevel: org.apache.spark.storage.StorageLevel =
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) {
+    lakeCompactEvery: Int = 0) {
 
   /** Bloom is the seen set's only filter kind; kept for callers that still
     * read the kind. */
@@ -513,7 +506,8 @@ final class CrawlDriver(
         length(col("html")).cast("long").as("bytes"),
         pageExpr.getField("doc").as("doc"),
         pageExpr.getField("links").as("links"))
-      .persist(cfg.persistLevel)
+      // spills to disk when a tick's fetch output outgrows executor memory
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     mark("processed")
     // everything from here holds the persisted working set: release it even
     // when a tick fails mid-flight (a long-lived driver whose caller

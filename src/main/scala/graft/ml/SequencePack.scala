@@ -67,10 +67,22 @@ object SequencePack {
     * value never affects results — only the shuffle shape. */
   val DefaultGroupSize = 32768L
 
+  /** Internal column names of [[packWindows]] and [[assembleWindows]]. A
+    * `docs` frame with any of them (compared case-insensitively, as Spark
+    * resolves names) is rejected with an `IllegalArgumentException`. */
+  val ReservedColumns: Seq[String] =
+    Seq("_grp", "_cum", "_grp_offset", "_start", "_firstWin", "_lastWin", "_toks", "_piece")
+
+  private def requireUnreserved(docs: DataFrame): Unit =
+    docs.columns.find(c => ReservedColumns.exists(_.equalsIgnoreCase(c))).foreach { c =>
+      throw new IllegalArgumentException(
+        s"docs column `$c` is reserved by SequencePack (reserved: ${ReservedColumns.mkString(", ")})")
+    }
+
   /** Map each doc to its training windows. Output: all of `docs`' columns
     * except `textCol`, plus `n_tokens`, `window_idx` (0-based within the
     * pack), `tok_from` (inclusive, 0-based within the doc), `tok_to`
-    * (exclusive). */
+    * (exclusive). `docs` may not have a [[ReservedColumns]] name. */
   def packWindows(
       docs: DataFrame,
       budget: Int,
@@ -78,6 +90,17 @@ object SequencePack {
       idCol: String = "doc_id",
       textCol: String = "text",
       groupSize: Long = DefaultGroupSize): DataFrame = {
+    requireUnreserved(docs)
+    pack(docs, budget, packCol, idCol, textCol, groupSize)
+  }
+
+  private def pack(
+      docs: DataFrame,
+      budget: Int,
+      packCol: String,
+      idCol: String,
+      textCol: String,
+      groupSize: Long): DataFrame = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
     require(groupSize >= 1, s"groupSize must be >= 1, got $groupSize")
     val n: Column = size(split(TextDedup.normText(col(textCol)), " ", -1)).cast("long")
@@ -132,15 +155,17 @@ object SequencePack {
     * scan-side (`slice` on the split — tokens are computed once per doc
     * row), then ONE shuffle groups the 1-2 pieces per (pack, window);
     * ordering inside a window is by doc id (total: a doc contributes at
-    * most one piece per window). */
+    * most one piece per window). `docs` may not have a [[ReservedColumns]]
+    * name. */
   def assembleWindows(
       docs: DataFrame,
       budget: Int,
       packCol: String = "source",
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val mapped = packWindows(docs.withColumn("_toks",
-        split(TextDedup.normText(col(textCol)), " ", -1)), budget, packCol, idCol, textCol)
+    requireUnreserved(docs)
+    val mapped = pack(docs.withColumn("_toks", split(TextDedup.normText(col(textCol)), " ", -1)),
+      budget, packCol, idCol, textCol, DefaultGroupSize)
     mapped
       .withColumn("_piece",
         array_join(slice(col("_toks"), col("tok_from") + 1, col("tok_to") - col("tok_from")), " "))

@@ -33,7 +33,8 @@ object TextDedup {
 
   /** Exact-dedup survivors only (the kept corpus): the min-id row per
     * distinct normalized text (ids assumed unique, as everywhere in the
-    * engine).
+    * engine). A null-id row never survives, as in [[exactGroups]], whose
+    * `min` ignores nulls: it neither wins its group nor forms one.
     *
     * Round-7 shape: rank-1 window over the text hash instead of
     * aggregate + semi-join — the old plan shuffled the FULL corpus twice
@@ -46,7 +47,8 @@ object TextDedup {
   def exactDedup(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(normText(col(textCol)))).orderBy(col(idCol))
-    docs.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn")
+    docs.where(col(idCol).isNotNull)
+      .withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn")
   }
 
   /** MinHash + LSH near-dup candidate pairs with exact-jaccard verification

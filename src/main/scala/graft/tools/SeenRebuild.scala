@@ -28,9 +28,7 @@ object SeenRebuild {
     val expectedPerSegment = args.lift(2).map(_.toLong).getOrElse(1L << 16)
     val buckets = args.lift(3).map(_.toInt).getOrElse(32) // CrawlLake.forCrawl's default
 
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session(Nil)
     val snap = rebuild(spark, lakeDir, p, expectedPerSegment, buckets)
     println(s"""{"tool":"seen_rebuild","snapshot":$snap,"p":$p,"buckets":$buckets}""")
     spark.stop()

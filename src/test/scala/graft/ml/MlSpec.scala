@@ -67,6 +67,18 @@ class TextDedupSpec extends AnyFunSuite {
     assert(TextDedup.exactDedup(docs).select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L, 4L))
   }
 
+  test("exact dedup: a null-id row never survives, as min ignores nulls in exactGroups") {
+    val withNulls = Seq(
+      (None, "shared text"), (Some(5L), "Shared  TEXT"), // one group: 5 survives
+      (None, "text only a null id has"),                // min id is null: no survivor
+      (Some(7L), "a text of its own")
+    ).toDF("doc_id", "text")
+    assert(TextDedup.exactDedup(withNulls).select("doc_id").as[Option[Long]].collect().sorted.toSeq ==
+      Seq(Some(5L), Some(7L)))
+    assert(TextDedup.exactGroups(withNulls).select("survivor_id").as[Option[Long]].collect().toSet ==
+      Set(Some(5L), None, Some(7L)))
+  }
+
   test("exact dedup plan: one hash-keyed exchange, pre-shuffle WindowGroupLimit, no self-join") {
     val plan = TextDedup.exactDedup(docs).queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)

@@ -121,6 +121,18 @@ class SequencePackSpec extends AnyFunSuite {
       SequencePack.packWindows(corpus.toDF("source", "doc_id", "text"), 0))
   }
 
+  test("a docs column with a reserved internal name is rejected by name") {
+    val docs = corpus.toDF("source", "doc_id", "text")
+    for (c <- SequencePack.ReservedColumns) {
+      val withC = docs.withColumn(c, lit(1L))
+      val e1 = intercept[IllegalArgumentException](SequencePack.packWindows(withC, 8))
+      val e2 = intercept[IllegalArgumentException](SequencePack.assembleWindows(withC, 8))
+      assert(e1.getMessage.contains(s"`$c`") && e2.getMessage.contains(s"`$c`"), e1.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](SequencePack.packWindows(docs.withColumn("_GRP", lit(1L)), 8))
+    assert(e.getMessage.contains("`_GRP`"), e.getMessage)
+  }
+
   test("assembly: window texts concatenated in order reproduce each pack's corpus exactly") {
     for (b <- Seq(4, 9, 64)) {
       val wins = SequencePack.assembleWindows(corpus.toDF("source", "doc_id", "text"), b)
