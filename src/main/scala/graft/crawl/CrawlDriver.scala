@@ -13,7 +13,9 @@ import graft.seen.SeenSet
 
 /** Engine configuration. Defaults match the reference's semantics where one
   * exists (budget 5 = the `slice(0, 5)` cost guard; blockCap 1000 = the
-  * no-NextToken first-page quirk). */
+  * no-NextToken first-page quirk). The `nowarn` silences the case class's
+  * own synthetic uses of its deprecated field. */
+@annotation.nowarn("cat=deprecation")
 final case class CrawlConfig(
     budget: Int = 5,
     seenPartitions: Int = SeenSet.DefaultPartitions,
@@ -64,12 +66,11 @@ final case class CrawlConfig(
       * scrape every `rate(720 minutes)` (see [[graft.operators.Recrawl]]).
       * The TTL view preserves the zero-exchange bucketed PENDING plan. */
     recrawlAfterTicks: Int = 0,
-    /** max total seen-segment bytes the per-tick probe will broadcast;
-      * while the seen set fits (any crawl below ~10^9 frontier URLs at
-      * default geometry) the probe is a scan-side codegen expression with
-      * ZERO shuffle; beyond it the segment-partitioned cogroup probe runs
-      * (see [[graft.seen.SeenSet.filterNew]]). */
-    seenBroadcastMaxBytes: Long = SeenSet.DefaultBroadcastMaxBytes,
+    /** no effect: the seen probe is always the segment-partitioned cogroup
+      * ([[graft.seen.SeenSet.filterNew]]). Kept because callers written for
+      * the retired broadcast probe still pass and read it by name. */
+    @deprecated("the seen probe has no broadcast gate", "0.1.0")
+    seenBroadcastMaxBytes: Long = 256L << 20,
     /** fold seen-set delta lists into the Bloom segments every K
       * ticks. Between compactions a tick appends exact sorted-hash delta
       * segments (bytes ∝ admitted URLs, not P × filter size); the probe
@@ -126,8 +127,10 @@ final case class TickStats(
   *     the pages scan is pruned by DPP/bucketing on url_hash — never a
   *     full-corpus shuffle;
   *  5. extraction runs inside whole-stage codegen ([[graft.functions.ExtractDocument]]);
-  *  6. seen probe: Bloom segment probe + one conditioned exact-confirm
-  *     anti-join against the frontier ([[SeenSet]]).
+  *  6. seen probe: candidates cogrouped with their seen partition's
+  *     segments by `pmod(url_hash, P)` (Bloom ⊕ delta-list probe, no driver
+  *     collect or broadcast) + one conditioned exact-confirm anti-join
+  *     against the frontier ([[SeenSet.filterNew]]).
   */
 final class CrawlDriver(
     spark: SparkSession,
@@ -279,62 +282,10 @@ final class CrawlDriver(
   private def seenSegments: Dataset[SeenSet.Segment] =
     lake.read("seen", segmentSchema).as[SeenSet.Segment]
 
-  /** Last known total seen-segment bytes (-1 = not yet measured). The gate
-    * between the broadcast probe and the cogroup probe is a PHYSICAL choice
-    * with identical semantics, so a slightly stale size is harmless; the
-    * broadcast path's collect refreshes it exactly every tick it runs,
-    * and the one aggregate job that seeds it runs once per driver, not per
-    * tick (round-3 judge item 6: per-tick fixed cost). Reset to -1 after a
-    * seen compaction while on the cogroup path, so a shrink below the gate
-    * re-enables the broadcast probe. */
-  private var seenBytes: Long = -1L
-
-  /** The previous tick's segment broadcast. Destroyed at the NEXT probe —
-    * the tick loop is synchronous, so by then every job that referenced it
-    * has completed; waiting for the ContextCleaner instead lets multiple
-    * up-to-gate-sized generations pile up between GCs (round-4 reviewer). */
-  private var seenBc: Option[org.apache.spark.broadcast.Broadcast[Array[Array[Array[Byte]]]]] = None
-
-  /** Size-gated seen probe (see [[SeenSet.filterNew]], whose dispatch this
-    * inlines to reuse the driver-tracked size across ticks). */
-  private def probeSeen(candidates: Dataset[FrontierEntry]): Dataset[FrontierEntry] = {
-    val segments = seenSegments
-    seenBc.foreach(_.destroy())
-    seenBc = None
-    if (seenBytes < 0)
-      seenBytes = segments
-        .agg(coalesce(sum(length(col("segment"))), lit(0L)).cast("long"))
-        .head().getLong(0)
-    if (seenBytes <= cfg.seenBroadcastMaxBytes) {
-      val segs = segments.collect()
-      seenBytes = segs.map(_.segment.length.toLong).sum
-      // the gate decision above used the PREVIOUS tick's measurement; if
-      // this tick's deltas pushed the set past the gate, don't broadcast the
-      // over-gate payload — fall through to the cogroup probe (round-4
-      // advisor: bounded but real one-tick overshoot of the driver-memory
-      // gate). The collect already happened (one-time cost this tick); the
-      // refreshed size keeps every later tick on the cogroup path.
-      if (seenBytes > cfg.seenBroadcastMaxBytes)
-        SeenSet.filterNewFiltered(candidates, segments, frontier.select("url_hash"), cfg.seenPartitions)
-      else {
-        val bc = spark.sparkContext.broadcast(
-          SeenSet.groupSegments(segs, cfg.seenPartitions))
-        seenBc = Some(bc)
-        SeenSet.filterNewBroadcast(candidates, bc, frontier.select("url_hash"), cfg.seenPartitions)
-      }
-    } else
-      SeenSet.filterNewFiltered(candidates, segments, frontier.select("url_hash"), cfg.seenPartitions)
-  }
-
-  /** Release driver-held runtime resources: the current generation's seen
-    * broadcast (the tick loop destroys the PREVIOUS generation at the next
-    * probe, so an abandoned driver otherwise parks one segment-set
-    * broadcast until GC — round-4 judge; the bench JVM carried four).
-    * Idempotent, and the driver stays usable: the next probe re-collects. */
-  def close(): Unit = {
-    seenBc.foreach(_.destroy())
-    seenBc = None
-  }
+  /** Release driver-held runtime resources. The driver holds none since
+    * the seen probe stopped broadcasting its segments; kept as a no-op
+    * because callers written for that probe still call it. */
+  def close(): Unit = ()
 
   /** Snapshot 0: seed list → frontier + seen segments. */
   def init(seeds: Seq[Seed]): Long = {
@@ -539,7 +490,8 @@ final class CrawlDriver(
     // localCheckpoint for the same reason as `scheduled`: fresh's plan
     // contains the frontier scan (exact confirm), which the frontier INSERT
     // would invalidate mid-commit.
-    val freshPlan = probeSeen(batchDedup).toDF()
+    val freshPlan = SeenSet.filterNew(
+      batchDedup, seenSegments, frontier.select("url_hash"), cfg.seenPartitions).toDF()
     mark("freshPlan")
     val fresh = freshPlan.localCheckpoint(false)
     mark("fresh")
@@ -593,10 +545,6 @@ final class CrawlDriver(
         "fetch_log" -> fetchRows,
         "extracted" -> extractedRows) ++ seenAppend,
       replaces = seenReplace)
-    // a compaction can SHRINK the seen set (delta lists fold away); while on
-    // the cogroup path the gate size is otherwise never re-measured, so
-    // force one re-measure next tick to re-enable the broadcast probe
-    if (compactTick && seenBytes > cfg.seenBroadcastMaxBytes) seenBytes = -1L
 
     if (sys.env.contains("GRAFT_TRACE"))
       println(f"[trace] tick $batchId total: ${(System.nanoTime() - tTrace) / 1e9}%.2fs")
@@ -637,12 +585,6 @@ final class CrawlDriver(
       else Map("seen" -> SeenSet.mergeSegments(
         seenSegments, SeenSet.emptySegments(spark), cfg.expectedPerSegment).toDF())
     lake.commit(batchId, appends = Map.empty, replaces = seenReplace)
-    // mirror runBatch's post-compaction gate re-measure: a compaction can
-    // SHRINK the seen set below the broadcast gate, and in TTL/cooldown
-    // steady state EMPTY ticks carry most compactions — without this the
-    // driver stayed on the cogroup probe until a non-empty compact tick
-    // happened to land (round-5 review)
-    if (compactTick && seenBytes > cfg.seenBroadcastMaxBytes) seenBytes = -1L
     compactLakeIfDue(batchId)
     TickStats(batchId, 0L, 0L, 0L, 0L, 0L)
   }

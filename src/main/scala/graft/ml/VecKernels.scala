@@ -42,23 +42,16 @@ object VecKernels {
     java.lang.Double.valueOf(s)
   }
 
-  private val LongMaxBD = java.math.BigDecimal.valueOf(Long.MaxValue)
-  private val LongMinBD = java.math.BigDecimal.valueOf(Long.MinValue)
-
   /** `CAST(round(v) AS BIGINT)` with Spark's exact double semantics:
     * Round(double) goes through BigDecimal.valueOf (the SHORTEST decimal
     * string — NOT floor(v+0.5): 11.4999999999999996 prints as "11.5" and
-    * HALF_UP gives 12) with NaN→0 and ±∞/overflow clamped like the
-    * non-ANSI double→long cast. */
+    * HALF_UP gives 12) and back to a double before the cast, so above 2^53
+    * the result is the double's value, not the decimal's; NaN→0 and
+    * ±∞/overflow clamp like the non-ANSI double→long cast. */
   private def roundToLong(v: Double): Long =
     if (java.lang.Double.isNaN(v)) 0L
     else if (java.lang.Double.isInfinite(v)) { if (v > 0) Long.MaxValue else Long.MinValue }
-    else {
-      val bd = java.math.BigDecimal.valueOf(v).setScale(0, java.math.RoundingMode.HALF_UP)
-      if (bd.compareTo(LongMaxBD) > 0) Long.MaxValue
-      else if (bd.compareTo(LongMinBD) < 0) Long.MinValue
-      else bd.longValue()
-    }
+    else java.math.BigDecimal.valueOf(v).setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
 
   /** Σ round(a(i)·1000)·round(b(i)·1000) as int64 — the integer-quantized
     * dot product (q24's oracle arithmetic), with the same per-element

@@ -28,10 +28,11 @@ import graft.model.FrontierEntry
   *    match, not whether the frontier is read: the anti-join scans the
   *    whole frontier as its build side every tick, even when every
   *    candidate is a negative;
-  *  - two probe shapes, size-gated by [[filterNew]]: the segments broadcast
-  *    and probed scan-side, or candidates shuffled by `pmod(url_hash, P)`
-  *    and cogrouped with their segments (each task deserializes its
-  *    segments once, never per row, never a driver collect).
+  *  - one probe shape, [[filterNew]]: candidates are shuffled by
+  *    `pmod(url_hash, P)` and cogrouped with their partition's segments, so
+  *    each task deserializes its segments once, never per row, and no
+  *    segment is collected to the driver; the plan scales with P, not with
+  *    total segment bytes.
   */
 object SeenSet {
 
@@ -55,92 +56,11 @@ object SeenSet {
       .as[FrontierEntry]
   }
 
-  /** Max total segment bytes [[filterNew]] will broadcast; above this the
-    * cogroup probe runs instead. 256 MB matches the engine's fetch-join
-    * broadcast budget — at the 10^10-URL design point (P=4096, ~4.4 MB
-    * Bloom segments ≈ 18 GB) the gate always routes to the cogroup. */
-  val DefaultBroadcastMaxBytes: Long = 256L << 20
-
-  /** Size-gated probe dispatch: while the seen set's total segment bytes fit
-    * a broadcast (true for any crawl until the frontier reaches ~10^9 URLs
-    * at default geometry), probe scan-side via [[SeenSegments.seen_probe]] —
-    * ZERO shuffle, no typed-object cogroup, and the candidate stream never
-    * leaves whole-stage codegen. Beyond the gate, fall back to the cogrouped
-    * probe ([[filterNewFiltered]]), whose shape is segment-partitioned and
-    * scales with P, not with total segment bytes. Both paths feed the same
-    * single conditioned anti-join, so semantics are identical (spec-asserted
-    * against [[filterNewExact]]).
-    *
-    * Convenience form: evaluates `segments` twice (size aggregate, then
-    * collect on the broadcast path) and leans on the ContextCleaner to
-    * reclaim the broadcast it creates. A tick LOOP should instead track
-    * the size across ticks and own the broadcast lifecycle — that dispatch
-    * lives in `CrawlDriver.probeSeen` (destroys the previous generation at
-    * the next probe; `close()` releases the last one).
-    */
+  /** Approximate-filter pre-screen + exact confirm (see object doc). A
+    * segment whose `partition_id` lies outside `[0, p)` (a seen set built
+    * at a larger P) fails the probe: no candidate could ever meet it, so
+    * its hashes would silently be readmitted as new. */
   def filterNew(
-      candidates: Dataset[FrontierEntry],
-      segments: Dataset[Segment],
-      seenHashes: DataFrame,
-      p: Int = DefaultPartitions,
-      broadcastMaxBytes: Long = DefaultBroadcastMaxBytes): Dataset[FrontierEntry] = {
-    val totalBytes = segments
-      .agg(coalesce(sum(length(col("segment"))), lit(0L)).cast("long"))
-      .head().getLong(0)
-    if (totalBytes <= broadcastMaxBytes)
-      filterNewBroadcast(candidates, segments.collect(), seenHashes, p)
-    else filterNewFiltered(candidates, segments, seenHashes, p)
-  }
-
-  /** Group collected segments by partition_id for [[SeenProbeBroadcast]]. */
-  def groupSegments(segs: Array[Segment], p: Int): Array[Array[Array[Byte]]] = {
-    val tmp = Array.fill(p)(List.empty[Array[Byte]])
-    segs.foreach { s =>
-      require(s.partition_id >= 0 && s.partition_id < p,
-        s"segment partition_id ${s.partition_id} out of range for P=$p")
-      tmp(s.partition_id) = s.segment :: tmp(s.partition_id)
-    }
-    tmp.map(_.reverse.toArray)
-  }
-
-  /** Broadcast-probe path of [[filterNew]]: `segs` (already collected —
-    * caller gates on size) are grouped by partition_id, broadcast once, and
-    * probed per candidate row by a codegen'd expression. Same
-    * probe-OR-then-exact-confirm semantics as the cogroup path.
-    * Callers managing broadcast lifecycle across ticks pass their own
-    * handle via the overload below. */
-  def filterNewBroadcast(
-      candidates: Dataset[FrontierEntry],
-      segs: Array[Segment],
-      seenHashes: DataFrame,
-      p: Int = DefaultPartitions): Dataset[FrontierEntry] =
-    filterNewBroadcast(
-      candidates,
-      candidates.sparkSession.sparkContext.broadcast(groupSegments(segs, p)),
-      seenHashes, p)
-
-  /** [[filterNewBroadcast]] over a caller-owned broadcast of the grouped
-    * segments (the caller destroys it once the tick's jobs complete —
-    * waiting for the ContextCleaner lets several 100MB-generation
-    * broadcasts pile up between GCs on a long crawl). */
-  def filterNewBroadcast(
-      candidates: Dataset[FrontierEntry],
-      grouped: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Byte]]]],
-      seenHashes: DataFrame,
-      p: Int): Dataset[FrontierEntry] = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    val probedDf = candidates.toDF()
-      .withColumn("maybe", SeenSegments.seen_probe(col("url_hash"), grouped, p))
-    val seenKeys = seenHashes.select(col("url_hash").as("seen_hash"))
-    probedDf
-      .join(seenKeys, probedDf("url_hash") === seenKeys("seen_hash") && col("maybe"), "left_anti")
-      .drop("maybe")
-      .as[FrontierEntry]
-  }
-
-  /** Approximate-filter pre-screen + exact confirm (see object doc). */
-  def filterNewFiltered(
       candidates: Dataset[FrontierEntry],
       segments: Dataset[Segment],
       seenHashes: DataFrame,
@@ -153,8 +73,10 @@ object SeenSet {
 
     // (candidate, maybeSeen); segment deserialized once per group
     val probed: Dataset[(FrontierEntry, Boolean)] = keyed.cogroup(segKeyed) {
-      (_, cands, segs) =>
+      (pid, cands, segs) =>
         val segList = segs.toList
+        // a candidate's key is in range by construction; only a segment's can be out
+        require(pid >= 0 && pid < p, s"seen segment partition_id $pid out of range for P=$p")
         if (segList.isEmpty) cands.map(c => (c, false))
         else {
           val probes = segList.map(s => SeenSegments.probeFn(s.segment))
@@ -175,6 +97,18 @@ object SeenSet {
       .drop("maybe")
       .as[FrontierEntry]
   }
+
+  /** Gate-taking form kept for callers written when a broadcast probe sat
+    * below `broadcastMaxBytes`; the cogroup probe is the only probe, so the
+    * gate is ignored. */
+  @deprecated("the seen probe has no broadcast gate; drop the broadcastMaxBytes argument", "0.1.0")
+  def filterNew(
+      candidates: Dataset[FrontierEntry],
+      segments: Dataset[Segment],
+      seenHashes: DataFrame,
+      p: Int,
+      broadcastMaxBytes: Long): Dataset[FrontierEntry] =
+    filterNew(candidates, segments, seenHashes, p)
 
   /** Build one Bloom segment per touched partition from newly admitted
     * hashes. Partial aggregation ORs executor-local segments before the

@@ -55,54 +55,6 @@ case class BloomBuildAgg(
     copy(child = cs.head)
 }
 
-/** `seen_probe(url_hash)` — scan-side probe of the WHOLE partitioned seen
-  * set against a broadcast of its segments (pid → segment blobs, probes
-  * OR'd). This is the small-seen-set fast path of [[SeenSet.filterNew]]:
-  * zero shuffle, evaluated inside whole-stage codegen via a reference call
-  * (`addReferenceObj`), with the segment blobs deserialized into probe
-  * closures once per task via the transient lazy val. The cogroup path
-  * ([[SeenSet.filterNewFiltered]]) remains the big-frontier fallback where
-  * the segment set itself outgrows a broadcast.
-  */
-case class SeenProbeBroadcast(
-    child: Expression,
-    segments: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Byte]]]],
-    p: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "seen_probe"
-
-  @transient private lazy val probes: Array[Array[Long => Boolean]] =
-    segments.value.map(_.map(SeenSegments.probeFn))
-
-  /** Called from generated code; must stay public. */
-  def probe(h: Long): Boolean = {
-    val ps = probes(math.floorMod(h, p.toLong).toInt)
-    var i = 0
-    while (i < ps.length) {
-      if (ps(i)(h)) return true
-      i += 1
-    }
-    false
-  }
-
-  override protected def nullSafeEval(h: Any): Any = probe(h.asInstanceOf[Long])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("seenProbe", this, classOf[SeenProbeBroadcast].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.probe($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SeenSegments {
   /** Segment formats this build cannot read, by magic. */
   private val Unreadable: Map[Int, String] = Map(
@@ -262,10 +214,4 @@ object SeenSegments {
     ExpressionUtils.column(
       BloomBuildAgg(ExpressionUtils.expression(urlHash), numBits, numHashes, designCapacity)
         .toAggregateExpression())
-
-  def seen_probe(
-      urlHash: Column,
-      segments: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Byte]]]],
-      p: Int): Column =
-    ExpressionUtils.column(SeenProbeBroadcast(ExpressionUtils.expression(urlHash), segments, p))
 }

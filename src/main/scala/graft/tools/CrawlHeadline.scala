@@ -13,11 +13,10 @@ import graft.synth.PageSynth
   * 200 hosts with megahost skew, budget 200, 64-partition seen set, 2
   * steady-state ticks. Both go through one routine, [[steadyCrawl]].
   *
-  * Each run tears its scratch lake down — `CrawlDriver.close()` releases
-  * the abandoned seen broadcast and `CrawlLake.drop()` deregisters the
-  * catalog tables and deletes the lake dir — so repeated runs in one bench
-  * JVM do not accumulate populated lakes (page-cache pressure on a tmpfs
-  * tmp) or parked broadcasts; and [[sentinel]] gives the bench a fixed
+  * Each run tears its scratch lake down — `CrawlLake.drop()` deregisters
+  * the catalog tables and deletes the lake dir — so repeated runs in one
+  * bench JVM do not accumulate populated lakes (page-cache pressure on a
+  * tmpfs tmp); and [[sentinel]] gives the bench a fixed
   * pure-CPU yardstick timed before every run so ambient host contention
   * is visible IN the artifact instead of argued after the fact.
   */
@@ -49,8 +48,8 @@ object CrawlHeadline {
     else System.getProperty("java.io.tmpdir")
 
   /** One headline crawl over a FRESH lake under `lakeParent` (default:
-    * [[scratchParent]]). Returns (fetched, wall_s); the lake and the
-    * driver's broadcasts are torn down before returning. */
+    * [[scratchParent]]). Returns (fetched, wall_s); the lake is torn down
+    * before returning. */
   def runOnce(
       spark: SparkSession,
       pagesDf: DataFrame,
@@ -62,7 +61,7 @@ object CrawlHeadline {
     * onto the frontier of a FRESH `buckets`-bucket lake under `lakeParent`
     * (default: [[scratchParent]]), then `ticks` ticks run over `pagesDf`
     * with no robots rules. Returns (fetched, wall_s of the ticks); the lake
-    * and the driver's broadcasts are torn down before returning. */
+    * is torn down before returning. */
   def steadyCrawl(
       spark: SparkSession,
       pagesDf: DataFrame,
@@ -84,10 +83,7 @@ object CrawlHeadline {
       val stats = driver.run(ticks)
       val wall = (System.nanoTime() - t0) / 1e9
       (stats.map(_.fetched).sum, wall)
-    } finally {
-      driver.close()
-      lake.drop()
-    }
+    } finally lake.drop()
   }
 
   /** Ambient-noise sentinel: a fixed, single-threaded, allocation-free

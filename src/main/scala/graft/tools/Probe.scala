@@ -208,27 +208,25 @@ object Probe {
     val lake = CrawlLake.forCrawl(Files.createTempDirectory("graft-demo-lake").toString, spark)
     val driver = new CrawlDriver(spark, lake, pagesDf, robots,
       CrawlConfig(budget = budget, seenPartitions = 16, expectedPerSegment = 1 << 14))
-    try {
-      driver.init(PageSynth.seeds(nPages, 5))
-      // a steady-state tick reuses the classes earlier ticks compiled and
-      // compiles nothing
-      val (ticked, secs) = timed((1 to ticks).map { _ =>
-        val c0 = CodegenWatch.compiles
-        val s = driver.tick()
-        s -> (CodegenWatch.compiles - c0)
-      })
-      ticked.foreach { case (s, c) => println(
-        f"[demo] tick ${s.batchId}: scheduled=${s.scheduled} fetched=${s.fetched} " +
-          f"failed=${s.failed} newUrls=${s.admittedNew} compiles=${c.count} (${c.ms}%.0f ms)") }
-      println("[demo] crawl order head:")
-      driver.crawlOrder().show(10, truncate = false)
-      println("[demo] politeness stage plan:")
-      graft.operators.Politeness.schedule(driver.frontier, budget).explain("formatted")
-      val fetched = ticked.map(_._1.fetched).sum
-      json(
-        "mode" -> "demo", "pages" -> nPages, "budget" -> budget, "ticks" -> ticks,
-        "fetched" -> fetched, "wall_s" -> secs, "urls_per_sec" -> fetched / secs, "lake" -> lake.root)
-    } finally driver.close()
+    driver.init(PageSynth.seeds(nPages, 5))
+    // a steady-state tick reuses the classes earlier ticks compiled and
+    // compiles nothing
+    val (ticked, secs) = timed((1 to ticks).map { _ =>
+      val c0 = CodegenWatch.compiles
+      val s = driver.tick()
+      s -> (CodegenWatch.compiles - c0)
+    })
+    ticked.foreach { case (s, c) => println(
+      f"[demo] tick ${s.batchId}: scheduled=${s.scheduled} fetched=${s.fetched} " +
+        f"failed=${s.failed} newUrls=${s.admittedNew} compiles=${c.count} (${c.ms}%.0f ms)") }
+    println("[demo] crawl order head:")
+    driver.crawlOrder().show(10, truncate = false)
+    println("[demo] politeness stage plan:")
+    graft.operators.Politeness.schedule(driver.frontier, budget).explain("formatted")
+    val fetched = ticked.map(_._1.fetched).sum
+    json(
+      "mode" -> "demo", "pages" -> nPages, "budget" -> budget, "ticks" -> ticks,
+      "fetched" -> fetched, "wall_s" -> secs, "urls_per_sec" -> fetched / secs, "lake" -> lake.root)
   }
 
   /** Seen set at a design partition count (default P=4096, 10^8 keys,
@@ -268,7 +266,7 @@ object Probe {
         when(col("id") % 2 === 0, xxhash64(shiftright(col("id"), 1)))
           .otherwise(xxhash64(col("id") + nKeys * 7 + 1)).as("h"))
       .map(r => FrontierEntry(r.getLong(0), "u", "h", 0, new java.sql.Timestamp(0L), 0L, 0L, 0.0))
-    val (admitted, tProbe) = timed(SeenSet.filterNewFiltered(candidates, merged, keys, p).count())
+    val (admitted, tProbe) = timed(SeenSet.filterNew(candidates, merged, keys, p).count())
     merged.unpersist()
     json(
       "mode" -> "seen", "p" -> p, "n_keys" -> nKeys, "n_candidates" -> nCand,
@@ -330,9 +328,6 @@ object Probe {
         "gc_s" -> tGc, "gc_deleted" -> gcDeleted,
         "snapshot_files" -> ListMap("before" -> before._1, "after" -> entries(snapDir)),
         "seen_dirs" -> ListMap("before" -> before._2, "after" -> entries(seenDir)))
-    } finally {
-      driver.close()
-      lake.drop()
-    }
+    } finally lake.drop()
   }
 }

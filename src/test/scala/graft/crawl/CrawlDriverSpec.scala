@@ -272,66 +272,23 @@ class CrawlDriverSpec extends AnyFunSuite {
     assert(lists.map(_.segment.length.toLong).sum < filters.map(_.segment.length.toLong).sum / 4)
   }
 
-  // The seen-probe gate (seenBroadcastMaxBytes) picks a physical path only:
-  // every gate setting must give the broadcast crawl and the oracle. One
-  // seed per host puts a Bloom segment in each of the 4 seen partitions, so
-  // a compaction folds every delta list back into those fixed-size Blooms.
-  private lazy val gateSeeds = PageSynth.seeds(N, PageSynth.NumHosts)
-  private val gateCfg = CrawlConfig(
-    budget = 2, seenPartitions = 4, expectedPerSegment = 4096, seenCompactEvery = 3)
-  private val GateTicks = 5
-
-  /** Total seen-segment bytes, the size the driver's probe gate compares. */
-  private def seenBytes(lake: CrawlLake): Long =
-    lake.read("seen", org.apache.spark.sql.Encoders.product[graft.seen.SeenSet.Segment].schema)
-      .agg(sum(length(col("segment")))).head().getLong(0)
-
-  /** Crawl order and frontier hashes. */
-  private def outcome(d: CrawlDriver): (Seq[(Long, Long, Int)], Set[Long]) =
-    (engineOrder(d), d.frontier.select("url_hash").as[Long].collect().toSet)
-
-  private lazy val gateSim = {
-    val sim = ReferenceSimulator.crawl(corpus, gateSeeds.map(_.url), 2, GateTicks, robotsMap)
-    (sim.crawlOrder.map(r => (r.batchId, r.urlHash, r.status)), sim.seenHashes)
-  }
-
-  private lazy val gateBroadcast = {
-    val (d, _) = newDriver(gateCfg)
-    d.init(gateSeeds)
-    d.run(GateTicks)
-    outcome(d)
-  }
-
-  test("seen probe gate 0: every tick takes the cogroup probe; crawl equals broadcast and oracle") {
-    val (d, lake) = newDriver(gateCfg.copy(seenBroadcastMaxBytes = 0L))
-    d.init(gateSeeds)
-    assert(seenBytes(lake) > 0L) // over the gate from the first probe on
-    d.run(GateTicks)
-    assert(outcome(d) == gateBroadcast)
-    assert(outcome(d) == gateSim)
-  }
-
-  test("seen probe gate crossed mid-crawl: fallback, cogroup, re-measure after compaction") {
-    val (seeder, lake) = newDriver(gateCfg)
-    seeder.init(gateSeeds)
+  // One seed per host puts a Bloom segment in each of the 4 seen partitions,
+  // so a compaction folds every delta list back into those fixed-size
+  // Blooms: the cogroup probe sees Bloom-only, Bloom ⊕ delta-list and
+  // freshly compacted partitions within 5 ticks.
+  test("cogroup seen probe across compactions: crawl equals the oracle") {
+    val seeds = PageSynth.seeds(N, PageSynth.NumHosts)
+    val ticks = 5
+    val (d, lake) = newDriver(CrawlConfig(
+      budget = 2, seenPartitions = 4, expectedPerSegment = 4096, seenCompactEvery = 3))
+    d.init(seeds)
     val segments = lake.read("seen",
       org.apache.spark.sql.Encoders.product[graft.seen.SeenSet.Segment].schema).count()
-    assert(segments == gateCfg.seenPartitions, "every seen partition should start with a Bloom")
-    // the gate is the seeded set's size: tick 1 broadcasts, its delta lists
-    // push the set past the gate, so tick 2's probe collects, finds the set
-    // over the gate and falls back to the cogroup probe; tick 3 cogroups
-    // and compacts, so tick 4 re-measures and broadcasts again
-    val gate = seenBytes(lake)
-    val d = new CrawlDriver(spark, lake, spark.createDataFrame(corpus.map(_.page)).repartition(4),
-      spark.createDataset(robotsEntries), gateCfg.copy(seenBroadcastMaxBytes = gate))
-    d.tick()
-    assert(seenBytes(lake) > gate, "tick 1 should grow the seen set past the gate")
-    d.tick()
-    d.tick()
-    assert(seenBytes(lake) <= gate, "the tick-3 compaction should shrink the set back under the gate")
-    (4 to GateTicks).foreach(_ => d.tick())
-    assert(outcome(d) == gateBroadcast)
-    assert(outcome(d) == gateSim)
+    assert(segments == 4, "every seen partition should start with a Bloom")
+    d.run(ticks)
+    val sim = ReferenceSimulator.crawl(corpus, seeds.map(_.url), 2, ticks, robotsMap)
+    assert(engineOrder(d) == sim.crawlOrder.map(r => (r.batchId, r.urlHash, r.status)))
+    assert(d.frontier.select("url_hash").as[Long].collect().toSet == sim.seenHashes)
   }
 
   test("lake compaction bounds partition growth, preserves the oracle, and resumes exactly") {

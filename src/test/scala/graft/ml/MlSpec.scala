@@ -314,17 +314,21 @@ class SimilaritySpec extends AnyFunSuite {
       hofQ($"embedding", $"other").as("h")).collect()
       .foreach(r => assert(r.getLong(0) == r.getLong(1), "qdot mismatch"))
     // half-way ties (HALF_UP vs floor(v+0.5) differ at negative halves),
-    // shortest-decimal rounding, nulls, ragged
+    // shortest-decimal rounding, nulls, ragged, and |v·1000| > 2^53 (Spark
+    // rounds through a double, not the decimal, before the cast)
     val edge = Seq(
       (Seq[java.lang.Double](0.0005, -0.0005, 0.0115, -1.5e-3), Seq[java.lang.Double](1.0, 1.0, 1.0, 1.0)),
       (Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](1.0, 1.0)),
-      (Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](1.0))
+      (Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](1.0)),
+      (Seq[java.lang.Double](1.2345678901234567e15, -1.2345678901234567e15),
+        Seq[java.lang.Double](0.001, 0.002))
     ).toDF("a", "b")
     val rows = edge.select(
       Similarity.quantizedDot($"a", $"b").as("k"), hofQ($"a", $"b").as("h")).collect()
     assert(rows(0).getLong(0) == rows(0).getLong(1))
     assert(rows(1).isNullAt(0) && rows(1).isNullAt(1))
     assert(rows(2).isNullAt(0) && rows(2).isNullAt(1))
+    assert(rows(3).getLong(0) == rows(3).getLong(1))
   }
 
   test("brute-force top-k: self-similar vector ranks first when included") {

@@ -60,43 +60,10 @@ class SeenSetSpec extends AnyFunSuite {
     val candidates = spark.createDataset((seenHashes.take(200) ++ newHashes).map(fe))
     val exact = SeenSet.filterNewExact(candidates, seenDf).collect().map(_.url_hash).sorted
     val filtered = SeenSet
-      .filterNewFiltered(candidates, segments, seenDf, p)
+      .filterNew(candidates, segments, seenDf, p)
       .collect().map(_.url_hash).sorted
     assert(exact.toSeq == newHashes.sorted.toSeq)
     assert(filtered.toSeq == exact.toSeq)
-  }
-
-  test("broadcast probe path ≡ exact ≡ cogroup path (mixed filter + list segments)") {
-    val p = 8
-    val seenDf = seenHashes.toDF("url_hash")
-    // mixed stack: filters over the first 2000, exact delta lists over the rest
-    val segments = SeenSet.buildDeltaSegments(seenHashes.take(2000).toDF("url_hash"), p, expectedPerSegment = 1024)
-      .union(SeenSet.buildDeltaList(seenHashes.drop(2000).toDF("url_hash"), p))
-    val candidates = spark.createDataset((seenHashes.take(300) ++ newHashes).map(fe))
-    val exact = SeenSet.filterNewExact(candidates, seenDf).collect().map(_.url_hash).sorted
-    val viaBroadcast = SeenSet
-      .filterNewBroadcast(candidates, segments.collect(), seenDf, p)
-      .collect().map(_.url_hash).sorted
-    val viaCogroup = SeenSet
-      .filterNewFiltered(candidates, segments, seenDf, p)
-      .collect().map(_.url_hash).sorted
-    assert(viaBroadcast.toSeq == exact.toSeq)
-    assert(viaCogroup.toSeq == exact.toSeq)
-  }
-
-  test("filterNew dispatch: small seen set broadcasts (zero cogroup), huge gate falls back") {
-    val p = 4
-    val seenDf = seenHashes.toDF("url_hash")
-    val segments = SeenSet.buildDeltaSegments(seenDf, p, expectedPerSegment = 1024)
-    val candidates = spark.createDataset((seenHashes.take(100) ++ newHashes.take(100)).map(fe))
-    val broadcastPlan = SeenSet.filterNew(candidates, segments, seenDf, p)
-    assert(broadcastPlan.queryExecution.analyzed.toString.contains("seen_probe"),
-      "small seen set should take the broadcast scan-side probe")
-    assert(broadcastPlan.collect().map(_.url_hash).sorted.toSeq == newHashes.take(100).sorted.toSeq)
-    val cogroupPlan = SeenSet.filterNew(candidates, segments, seenDf, p, broadcastMaxBytes = 0L)
-    assert(!cogroupPlan.queryExecution.analyzed.toString.contains("seen_probe"),
-      "over-gate seen set must fall back to the cogroup probe")
-    assert(cogroupPlan.collect().map(_.url_hash).sorted.toSeq == newHashes.take(100).sorted.toSeq)
   }
 
   test("mergeSegments: probe over merged ≡ probe over union") {
@@ -130,7 +97,7 @@ class SeenSetSpec extends AnyFunSuite {
       }
   }
 
-  test("filterNewFiltered is exact over mixed filter + delta-list segments") {
+  test("filterNew is exact over mixed filter + delta-list segments") {
     val p = 8
     val (seenA, seenB) = seenHashes.splitAt(1500)
     val segments = SeenSet.buildDeltaSegments(seenA.toDF("url_hash"), p, 1024)
@@ -138,7 +105,7 @@ class SeenSetSpec extends AnyFunSuite {
     val seenDf = seenHashes.toDF("url_hash")
     val candidates = spark.createDataset(
       (seenA.take(100) ++ seenB.take(100) ++ newHashes).map(fe))
-    val out = SeenSet.filterNewFiltered(candidates, segments, seenDf, p)
+    val out = SeenSet.filterNew(candidates, segments, seenDf, p)
       .collect().map(_.url_hash).sorted
     assert(out.toSeq == newHashes.sorted.toSeq)
   }
@@ -148,10 +115,43 @@ class SeenSetSpec extends AnyFunSuite {
     val seenDf = seenHashes.toDF("url_hash")
     val segments = SeenSet.buildDeltaSegments(seenDf, p, expectedPerSegment = 1024)
     val candidates = spark.createDataset((seenHashes.take(50) ++ newHashes.take(50)).map(fe))
-    val plan = SeenSet.filterNewFiltered(candidates, segments, seenDf, p)
+    val plan = SeenSet.filterNew(candidates, segments, seenDf, p)
       .queryExecution.executedPlan.toString
     val cogroups = "CoGroup".r.findAllIn(plan).size
     assert(cogroups == 1, s"probe subtree duplicated: $cogroups CoGroup nodes in plan\n$plan")
+  }
+
+  test("filterNew rejects a segment whose partition_id is outside [0, P)") {
+    // a seen set built at P=8 probed at P=4: partitions 4..7 can never meet
+    // a candidate, so probing on would readmit their hashes as new
+    val seenDf = seenHashes.toDF("url_hash")
+    val segments = SeenSet.buildDeltaSegments(seenDf, 8, expectedPerSegment = 1024)
+    val candidates = spark.createDataset((seenHashes.take(100) ++ newHashes.take(100)).map(fe))
+    @annotation.nowarn("cat=deprecation")
+    def viaGate(gate: Long) = SeenSet.filterNew(candidates, segments, seenDf, 4, gate)
+    for (probe <- Seq(() => SeenSet.filterNew(candidates, segments, seenDf, 4), () => viaGate(0L))) {
+      val err = intercept[Exception](probe().collect())
+      val iae = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalArgumentException => e }
+      assert(iae.exists(e => e.getMessage.contains("out of range for P=4") &&
+        (4 until 8).exists(pid => e.getMessage.contains(s"partition_id $pid "))), err.toString)
+    }
+  }
+
+  test("the gate-taking filterNew ignores the gate and forwards unchanged") {
+    val p = 4
+    val seenDf = seenHashes.toDF("url_hash")
+    val segments = SeenSet.buildDeltaSegments(seenDf, p, expectedPerSegment = 1024)
+    val candidates = spark.createDataset((seenHashes.take(100) ++ newHashes.take(100)).map(fe))
+    val expected = SeenSet.filterNew(candidates, segments, seenDf, p).collect().map(_.url_hash).sorted.toSeq
+    assert(expected == newHashes.take(100).sorted)
+    @annotation.nowarn("cat=deprecation")
+    def viaGate(gate: Long) = SeenSet.filterNew(candidates, segments, seenDf, p, gate)
+    for (gate <- Seq(0L, Long.MaxValue)) {
+      val plan = viaGate(gate).queryExecution.executedPlan.toString
+      assert("CoGroup".r.findAllIn(plan).size == 1, s"gate $gate: want the cogroup probe\n$plan")
+      assert(viaGate(gate).collect().map(_.url_hash).sorted.toSeq == expected, s"gate $gate")
+    }
   }
 
   private def magic(b: Array[Byte]): Int = java.nio.ByteBuffer.wrap(b, 0, 4).getInt
