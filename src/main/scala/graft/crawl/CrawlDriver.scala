@@ -76,10 +76,10 @@ final case class CrawlConfig(
       * segments (bytes ∝ admitted URLs, not P × filter size); the probe
       * cogroup ORs filter ⊕ deltas, so correctness is unaffected. */
     seenCompactEvery: Int = 8,
-    /** fold the lake's bucketed tick partitions (frontier/fetch_log) into
-      * one compacted partition and consolidate extracted's dirs every K
-      * ticks, bounding read-side file counts over long crawls (0 = off —
-      * the Iceberg-rewrite-style maintenance is an explicit choice, like
+    /** fold each bucketed table's tick partitions (frontier, fetch_log,
+      * extracted) into one compacted partition every K ticks, bounding
+      * read-side file counts over long crawls (0 = off — the
+      * Iceberg-rewrite-style maintenance is an explicit choice, like
       * running expire-snapshots). */
     lakeCompactEvery: Int = 0) {
 
@@ -107,7 +107,10 @@ final case class TickStats(
   * State model (all in [[CrawlLake]], committed atomically per tick):
   *  - `frontier`  append-only, exactly one row per canonical url_hash
   *    (first-discovery-wins at insert) — membership IS the seen set;
-  *  - `seen`      Bloom segments over frontier hashes (replace);
+  *  - `seen`      the frontier hashes, partitioned by `pmod(url_hash, P)`:
+  *    each tick appends its admitted hashes as exact sorted delta lists,
+  *    and every `seenCompactEvery` ticks one replace folds them into the
+  *    Bloom segments;
   *  - `fetch_log` lineage: every scheduled URL with status/bytes/partition;
   *    PENDING = frontier ∖ fetch_log, so state is derived, never mutated;
   *  - `extracted` deterministic text+KV per fetched page.
@@ -141,16 +144,19 @@ final class CrawlDriver(
 
   import spark.implicits._
 
-  // fail fast on an enrich-layout mismatch: a bucketed `extracted` spec
-  // without the enrichment columns would silently DROP them on every write
-  // (the loss would only surface when extractedFull fails much later) —
-  // round-4 reviewer. Lakes are built with CrawlLake.forCrawl(enrich = ...)
-  // matching CrawlConfig.enrich.
+  /** Read schema of `extracted` under the current config (shared by
+    * [[extractedFull]] and [[extractedSince]] so the CDC view can never
+    * desync from the consumer view). */
+  private val extractedReadSchema = CrawlLake.extractedSchema(cfg.enrich)
+
+  // fail fast on a lake-layout mismatch: a bucketed `extracted` without the
+  // enrichment columns would silently DROP them on every write, one with
+  // them would fail every write, and a lake without a bucketed `extracted`
+  // is not the crawl layout at all
   require(
-    !cfg.enrich || lake.bucketed.get("extracted")
-      .forall(_.schema.fieldNames.contains("simhash")),
-    "CrawlConfig.enrich=true but the lake's bucketed 'extracted' schema has no " +
-      "enrichment columns — build it with CrawlLake.forCrawl(..., enrich = true)")
+    lake.bucketed.get("extracted").map(_.schema).contains(extractedReadSchema),
+    s"the lake's bucketed 'extracted' layout does not match CrawlConfig.enrich=${cfg.enrich}" +
+      s" — build the lake with CrawlLake.forCrawl(..., enrich = ${cfg.enrich})")
 
   // Fail fast on seen-geometry drift across resumes: segments are keyed by
   // pmod(url_hash, P), so resuming with a different seenPartitions than the
@@ -176,7 +182,7 @@ final class CrawlDriver(
 
   private val frontierSchema = Encoders.product[FrontierEntry].schema
   private val fetchSchema = Encoders.product[FetchRecord].schema
-  private val extractedSchema = Encoders.product[Extracted].schema
+  private val extractedSchema = CrawlLake.extractedSchema(enrich = false)
   private val segmentSchema = Encoders.product[SeenSet.Segment].schema
 
   /** Deterministic batch timestamps: epoch base + batch minutes. Wall clock
@@ -185,8 +191,8 @@ final class CrawlDriver(
 
   /** The pages side of the fetch join. When the corpus table already
     * carries a url_hash column (the recommended 100 TB layout: pages stored
-    * bucketed by url_hash, see BucketedFrontier), it is used as-is — a
-    * bucketed scan then joins the scheduled batch with NO exchange on the
+    * as a catalog table bucketed and sorted by url_hash), it is used as-is —
+    * a bucketed scan then joins the scheduled batch with NO exchange on the
     * corpus side even when the batch is too large to broadcast
     * (plan-asserted in CrawlDriverSpec). Otherwise the hash is computed
     * scan-side from the url. */
@@ -197,15 +203,6 @@ final class CrawlDriver(
   def frontier: DataFrame = lake.read("frontier", frontierSchema)
   def fetchLog: DataFrame = lake.read("fetch_log", fetchSchema)
   def extracted: DataFrame = lake.read("extracted", extractedSchema)
-
-  /** Read schema of `extracted` under the current config: base columns,
-    * widened with the enrichment struct when [[CrawlConfig.enrich]] is on
-    * (shared by [[extractedFull]] and [[extractedSince]] so the CDC view
-    * can never desync from the consumer view). */
-  private def extractedReadSchema: org.apache.spark.sql.types.StructType =
-    if (!cfg.enrich) extractedSchema
-    else org.apache.spark.sql.types.StructType(
-      extractedSchema.fields ++ graft.ml.TextEnrich.schema.fields.map(_.copy(nullable = true)))
 
   /** `extracted` including the enrichment columns when the engine runs
     * with [[CrawlConfig.enrich]] — the training-data consumer's view
@@ -513,13 +510,12 @@ final class CrawlDriver(
       println(f"[trace] discover+dedup+probe: ${(System.nanoTime() - tTrace) / 1e9}%.2fs ($admittedCount new)")
     val stats =
       if (cfg.collectStats) {
-        val fetchedCount = processed.count()
-        // discovered = total links extracted this tick (pre-filter,
-        // pre-dedup) — a cached-read aggregate; the field was hardcoded 0
-        // and every metrics consumer read a dead stat (round-5 review)
-        val discoveredCount = processed
-          .agg(coalesce(sum(size(col("links"))), lit(0)).cast("long"))
-          .head().getLong(0)
+        // fetched pages and discovered links (pre-filter, pre-dedup) in
+        // one cached-read aggregate
+        val counts = processed
+          .agg(count(lit(1)), coalesce(sum(size(col("links"))), lit(0)).cast("long"))
+          .head()
+        val (fetchedCount, discoveredCount) = (counts.getLong(0), counts.getLong(1))
         TickStats(batchId, scheduledCount, fetchedCount,
           failed = scheduledCount - fetchedCount, discovered = discoveredCount,
           admittedNew = admittedCount)
@@ -561,24 +557,17 @@ final class CrawlDriver(
   /** Fold the lake's bucketed tick partitions when the cadence is due —
     * shared by the full and empty tick paths (they must never diverge). */
   private def compactLakeIfDue(batchId: Long): Unit =
-    if (cfg.lakeCompactEvery > 0 && batchId % cfg.lakeCompactEvery.toLong == 0L) {
+    if (cfg.lakeCompactEvery > 0 && batchId % cfg.lakeCompactEvery.toLong == 0L)
       lake.bucketed.keys.toSeq.sorted.foreach(lake.compactBucketed)
-      if (!lake.bucketed.contains("extracted")) lake.compactTable("extracted")
-    }
 
   /** Empty-schedule tick: identical snapshot TRAJECTORY to the full path on
-    * empty inputs, with zero Spark write jobs on non-compact ticks — an
-    * append table absent from the commit map inherits its previous dirs
-    * (and an empty append contributed no dir anyway, since writeDir drops
-    * rowless output), so the manifest advances with nothing to write. A
-    * compact tick still folds the accumulated delta lists into filter
-    * segments (an empty delta changes nothing about that fold). */
+    * empty inputs, with zero Spark write jobs on non-compact ticks — the
+    * commit writes no bucketed table (it scrubs each one's crash leftover
+    * `_pbatch=batchId` instead) and `seen` inherits its previous dirs, so
+    * the manifest advances with nothing to write. A compact tick still
+    * folds the accumulated delta lists into filter segments (an empty
+    * delta changes nothing about that fold). */
   private def commitEmptyTick(batchId: Long): TickStats = {
-    // publishing batchId WITHOUT bucketed writes skips their per-partition
-    // idempotency drop — scrub any crashed earlier attempt's _pbatch=batchId
-    // leftovers first, or they'd become visible as the manifest advances
-    // (no-op, zero Spark jobs, in the normal case)
-    lake.dropCrashLeftovers(batchId)
     val compactTick = cfg.seenCompactEvery > 0 && batchId % cfg.seenCompactEvery.toLong == 0L
     val seenReplace =
       if (!compactTick) Map.empty[String, DataFrame]

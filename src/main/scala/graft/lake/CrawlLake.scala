@@ -39,22 +39,27 @@ import graft.functions.GraftFunctions.bound_value
   * file onto LATEST. A crash before (3) leaves orphan data dirs that no
   * manifest references — invisible to readers, GC-able.
   *
-  * Append vs replace per table: `append` tables accumulate dirs across
-  * snapshots (frontier/fetch_log/extracted); `replace` tables list only the
-  * newest dirs (seen segments, P small rows rewritten per batch).
+  * Append vs replace per dir table: `append` tables accumulate dirs across
+  * snapshots; `replace` tables list only the newest dirs. In the crawl
+  * layout ([[CrawlLake.forCrawl]]) the only dir table is `seen`: per-tick
+  * delta lists appended, periodically replaced by their merged segments.
   *
   * ==Bucketed tables==
-  * Tables named in `bucketed` are stored as url_hash-bucketed, batch_id-
+  * Tables named in `bucketed` are stored as url_hash-bucketed, `_pbatch`-
   * partitioned external catalog tables under `root/bucketed/<table>` instead
   * of manifest-listed dirs — the 10^10-row layout of the engine's hottest
   * join (PENDING = frontier ∖ fetch_log anti-join on url_hash every tick):
   * with both sides `CLUSTERED BY (url_hash) INTO B BUCKETS`, Catalyst plans
-  * the join with NO Exchange on either side, and the `batch_id <= committed`
+  * the join with NO Exchange on either side, and the `_pbatch <= committed`
   * read filter both provides snapshot isolation (MVCC: a partition written
   * by a crashed commit is invisible until its batch commits, exactly like an
-  * Iceberg snapshot) and prunes partitions at the scan. Writes append one
-  * batch_id partition per tick, dropping any crash leftover of the same
-  * batch first, so a deterministic batch retry is idempotent.
+  * Iceberg snapshot) and prunes partitions at the scan. A real Iceberg
+  * deployment gets the same layout from bucket partition transforms. Every
+  * commit drops any crash leftover `_pbatch=batchId` partition before it
+  * publishes the batch — by the write's own drop for the tables it
+  * appends to, and by an explicit scrub for the ones it does not — so a
+  * deterministic batch retry is idempotent. [[compactBucketed]] folds the
+  * tick partitions into one.
   */
 final class CrawlLake(
     val root: String,
@@ -127,8 +132,7 @@ final class CrawlLake(
     * DataFrame with the supplied schema (callers always pass one so plans
     * resolve even at snapshot 0). Bucketed tables read through the catalog
     * (preserving the bucketed output partitioning) with the MVCC
-    * `batch_id <= committed` filter; `batch_id` is projected away when the
-    * caller's schema doesn't carry it. */
+    * `_pbatch <= committed` filter; `_pbatch` is projected away. */
   def read(table: String, schema: StructType, snapshotId: Option[Long] = None): DataFrame = {
     val snap = snapshotId.orElse(latestSnapshotId)
     if (bucketed.contains(table)) {
@@ -208,12 +212,11 @@ final class CrawlLake(
       appends.keySet.intersect(replaces.keySet).isEmpty,
       s"table(s) ${appends.keySet.intersect(replaces.keySet).mkString(", ")} appear in both " +
         "appends and replaces — their concurrent writes would race on one batch dir")
-    // scrub crash leftovers for bucketed tables this commit does NOT write:
-    // their per-write idempotency drop (writeBucketedPartition) never runs,
-    // yet publishing batchId makes an orphan _pbatch=batchId partition from
-    // a crashed earlier attempt visible (round-5 review; commitEmptyTick
-    // handled the all-tables-absent case, this closes the partial one).
-    // No-op with zero Spark jobs when nothing is left over.
+    // scrub crash leftovers for bucketed tables this commit does NOT write
+    // (every one of them on an empty tick): their per-write idempotency drop
+    // (writeBucketedPartition) never runs, yet publishing batchId makes an
+    // orphan _pbatch=batchId partition from a crashed earlier attempt
+    // visible. No-op with zero Spark jobs when nothing is left over.
     bucketed.keys.filterNot(appends.contains).toSeq.sorted.foreach(dropPartition(_, batchId))
     val updated = scala.collection.mutable.Map[String, Vector[String]](prev.toSeq: _*)
     val futures =
@@ -309,15 +312,6 @@ final class CrawlLake(
     }
   }
 
-  /** Scrub crash leftovers of `batchId` from every bucketed table — the
-    * idempotency guard [[writeBucketedPartition]] applies before its own
-    * insert, exposed for commit paths that publish a batch WITHOUT writing
-    * (empty ticks): an orphan `_pbatch=batchId` partition from a crashed
-    * earlier attempt must not become visible when the manifest advances to
-    * batchId. No-op (zero Spark jobs) when nothing is left over. */
-  def dropCrashLeftovers(batchId: Long): Unit =
-    bucketed.keys.toSeq.sorted.foreach(dropPartition(_, batchId))
-
   /** Registered partition values of a bucketed table (catalog view). */
   def partitionIds(table: String): Seq[Long] =
     spark.sql(s"SHOW PARTITIONS ${catalogName(table)}")
@@ -361,25 +355,6 @@ final class CrawlLake(
       .foreach(dropPartition(table, _))
     scala.util.Using.resource(Files.walk(Paths.get(staging)))(
       _.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_)))
-    newId
-  }
-
-  /** Compact a dir-based append table: rewrite its accumulated dirs into one
-    * consolidated dir and publish a snapshot listing only that dir; the
-    * superseded dirs become unreferenced by later snapshots and are
-    * reclaimed by [[gcOrphans]] once time-travel depth allows. */
-  def compactTable(table: String): Long = {
-    require(!bucketed.contains(table), s"$table is bucketed; use compactBucketed")
-    val latest = latestSnapshotId.getOrElse(throw new IllegalStateException("empty lake"))
-    val dirs = manifest(latest).getOrElse(table, Vector.empty)
-    if (dirs.size <= 1) return latest
-    val newId = latest + 1
-    val dir = rootPath.resolve("data").resolve(table).resolve(f"compact-$newId%09d").toString
-    spark.read.parquet(dirs: _*).write.mode("overwrite").parquet(dir)
-    publishSnapshot(
-      newId, batchIdOf(latest),
-      manifest(latest) + (table -> Vector(dir)),
-      compactMeta(latest))
     newId
   }
 
@@ -452,8 +427,7 @@ object CrawlLake {
     }
 
   /** Physical layout of a bucketed lake table: `schema` is the caller-facing
-    * row shape (a `batch_id` partition column is added on disk when the
-    * schema doesn't already carry one). */
+    * row shape (the `_pbatch` partition column is added on disk). */
   final case class BucketedTableSpec(
       schema: StructType,
       bucketCol: String = "url_hash",
@@ -470,26 +444,29 @@ object CrawlLake {
     * any consumer join on url_hash plan with no Exchange either
     * (plan-asserted in CrawlDriverSpec).
     * @param enrich widen extracted's stored schema with the fused
-    *               enrichment columns (must match CrawlConfig.enrich, or
-    *               the bucketed write would silently drop them) */
+    *               enrichment columns (must match CrawlConfig.enrich;
+    *               CrawlDriver checks it at construction) */
   def forCrawl(
       root: String,
       spark: SparkSession,
       buckets: Int = 32,
       enrich: Boolean = false): CrawlLake = {
     import org.apache.spark.sql.Encoders
-    val extractedSchema = {
-      val base = Encoders.product[graft.model.Extracted].schema
-      if (!enrich) base
-      else org.apache.spark.sql.types.StructType(
-        base.fields ++ graft.ml.TextEnrich.schema.fields.map(_.copy(nullable = true)))
-    }
     new CrawlLake(root, spark, Map(
       "frontier" -> BucketedTableSpec(
         Encoders.product[graft.model.FrontierEntry].schema, "url_hash", buckets),
       "fetch_log" -> BucketedTableSpec(
         Encoders.product[graft.model.FetchRecord].schema, "url_hash", buckets),
-      "extracted" -> BucketedTableSpec(extractedSchema, "url_hash", buckets)))
+      "extracted" -> BucketedTableSpec(extractedSchema(enrich), "url_hash", buckets)))
+  }
+
+  /** The stored schema of `extracted`: the [[graft.model.Extracted]] columns,
+    * widened with the nullable enrichment columns when `enrich` is on. The
+    * one definition the crawl layout and the driver's reads share. */
+  def extractedSchema(enrich: Boolean): StructType = {
+    val base = org.apache.spark.sql.Encoders.product[graft.model.Extracted].schema
+    if (!enrich) base
+    else StructType(base.fields ++ graft.ml.TextEnrich.schema.fields.map(_.copy(nullable = true)))
   }
 
   /** Shared pool for concurrent per-table commit writes. */

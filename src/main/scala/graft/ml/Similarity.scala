@@ -26,8 +26,6 @@ object Similarity {
   // ANN profile; the kernels keep the identical fp accumulation order.
   def dot(a: Column, b: Column): Column = VecFunctions.vec_dot(a, b)
 
-  def norm2(a: Column): Column = sqrt(dot(a, a))
-
   def cosine(a: Column, b: Column): Column = VecFunctions.vec_cosine(a, b)
 
   /** Integer-quantized dot product (×1000, HALF_UP) — exactly reproducible

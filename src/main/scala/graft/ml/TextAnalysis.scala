@@ -23,13 +23,6 @@ object TextAnalysis {
   def tokenCount(textCol: Column): Column =
     size(split(trim(textCol), " +"))
 
-  /** A BPE-ish subword count upper bound: word tokens plus intra-word
-    * punctuation/digit boundaries (regex split on letter/digit/punct class
-    * changes) — the cheap token-budget estimator a data pipeline uses
-    * before running a real tokenizer. */
-  def subwordCountEstimate(textCol: Column): Column =
-    size(split(trim(textCol), "(?<=[a-zA-Z])(?=[0-9])|(?<=[0-9])(?=[a-zA-Z])|[^a-zA-Z0-9]+"))
-
   private val stopwordsEn = Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
   private val stopwordsDe = Seq("der", "die", "das", "und", "ist", "ein", "zu", "mit", "von", "auf")
   private val stopwordsEs = Seq("el", "la", "de", "y", "que", "en", "un", "es", "por", "con")

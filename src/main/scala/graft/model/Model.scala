@@ -22,12 +22,6 @@ final case class Page(
     text: String,
     lang: String)
 
-object FrontierState {
-  val Pending = "PENDING"
-  val Fetched = "FETCHED"
-  val Failed  = "FAILED"
-}
-
 /** One frontier row per canonical URL; first discovery wins (the Bloom/exact
   * dedup at insert time replaces the reference's DynamoDB put-overwrite
   * idempotency, `src/scrape-pdfs-from-website/lambda.ts:94-100`, README.md:63).

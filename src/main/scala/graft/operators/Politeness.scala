@@ -81,13 +81,4 @@ object Politeness {
     * limiter resumes exactly from checkpoint because fetch_log does. */
   def hostCooldown(pending: DataFrame, recentHosts: DataFrame): DataFrame =
     pending.join(recentHosts.select("host").distinct(), Seq("host"), "left_anti")
-
-  /** Salted repartition for megahost skew (SURVEY.md §2 north-rule
-    * extensions): spreads one hot host over `salt` sub-partitions keyed by
-    * `(host, url_hash mod salt)`. The politeness window itself doesn't need
-    * it — WindowGroupLimit bounds each reducer to mapTasks·budget rows per
-    * host pre-shuffle — but per-host aggregations over fetch_log/extracted
-    * (metrics, rate tracking) do; pair with AQE skew-join as backstop. */
-  def saltedByHost(df: DataFrame, partitions: Int, salt: Int): DataFrame =
-    df.repartition(partitions, col("host"), pmod(col("url_hash"), lit(salt.toLong)))
 }

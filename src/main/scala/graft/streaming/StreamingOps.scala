@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -24,12 +22,12 @@ object StreamingOps {
     *
     * SCOPE (round-5 review): this is a PATH-level file source — it tracks
     * data files, not lake snapshots, so it is only delta-correct over a
-    * layout whose files are immutable-once-written and appended on commit:
-    * the dir-table layout with `lakeCompactEvery = 0`. Over the bucketed
-    * layout a compaction REWRITES every visible row into a fresh
-    * partition, which this source would re-emit as 10^10 "new" deltas, and
-    * files land before the manifest flips (a crashed commit's files are
-    * visible). Snapshot-consistent consumers use the batch CDC views —
+    * directory whose files are immutable-once-written and appended on
+    * commit. The crawl lake's bucketed frontier is not one: a compaction
+    * REWRITES every visible row into a fresh partition, which this source
+    * would re-emit as 10^10 "new" deltas, and files land before the
+    * manifest flips (a crashed commit's files are visible).
+    * Snapshot-consistent consumers use the batch CDC views —
     * `CrawlDriver.extractedSince` / `frontierSince` — which read through
     * the lake's MVCC layer. */
   def frontierDeltaStream(spark: SparkSession, frontierDir: String): DataFrame =
@@ -113,15 +111,5 @@ object StreamingOps {
           state.update(HostTokens(tokens))
           out.iterator
         })
-  }
-
-  /** E1-analog: the discovery tick as a streaming trigger — a rate-style
-    * tick source driving `CrawlDriver.tick()` via foreachBatch. Bounded
-    * variant for tests: AvailableNow over a tick table. */
-  def tickStream(spark: SparkSession, ticks: Int): DataFrame = {
-    import spark.implicits._
-    // bounded deterministic tick source (tests); production would use
-    // Trigger.ProcessingTime("720 minutes") on a rate source per stack.ts:206
-    (1 to ticks).map(i => (i.toLong, new Timestamp(i * 60000L))).toDF("tick", "ts")
   }
 }

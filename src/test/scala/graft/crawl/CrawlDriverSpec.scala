@@ -221,7 +221,10 @@ class CrawlDriverSpec extends AnyFunSuite {
     // side unshuffled (only the small batch exchanges to match)
     val pagesWithHash = spark.createDataFrame(corpus.map(_.page))
       .withColumn("url_hash", graft.functions.GraftFunctions.url_hash64($"url"))
-    graft.lake.BucketedFrontier.writeBucketed(pagesWithHash, "graft_pages_spec", buckets = 8)
+    pagesWithHash.write.mode("overwrite")
+      .bucketBy(8, "url_hash").sortBy("url_hash")
+      .option("path", Files.createTempDirectory("graft-pages-spec").toString)
+      .saveAsTable("graft_pages_spec")
     val bucketedPages = spark.table("graft_pages_spec")
 
     val cfg = CrawlConfig(budget = 2, seenPartitions = 8, expectedPerSegment = 4096)
@@ -429,6 +432,117 @@ class CrawlDriverSpec extends AnyFunSuite {
     val logCount = driver.fetchLog.count()
     assert(logCount == stats.map(_.scheduled).sum)
     assert(driver.extracted.count() == stats.map(_.fetched).sum)
+
+    // discovered = every link the tick's fetched pages hold, recounted from
+    // the lineage: status-200 fetch_log rows joined back to the corpus
+    val pagesKeyed = spark.createDataFrame(corpus.map(_.page))
+      .select(graft.functions.GraftFunctions.url_hash64($"url").as("url_hash"), $"html")
+    val linksPerTick = driver.fetchLog.where($"status" === 200)
+      .join(pagesKeyed, Seq("url_hash"))
+      .groupBy("batch_id")
+      .agg(sum(size(graft.functions.GraftFunctions
+        .extract_page($"html", $"url", cfg.blockCap, false).getField("links"))).cast("long"))
+      .as[(Long, Long)].collect().toMap
+    stats.foreach { s =>
+      assert(s.discovered == linksPerTick.getOrElse(s.batchId, 0L), s"tick ${s.batchId}: $s")
+    }
+    assert(stats.exists(_.discovered > 0), stats)
+  }
+
+  test("the driver accepts only the crawl lake layout matching its enrich setting") {
+    val pagesDf = spark.createDataFrame(corpus.map(_.page))
+    val robotsDs = spark.createDataset(Seq.empty[graft.model.RobotsEntry])
+    def construct(lake: CrawlLake, enrich: Boolean): Unit = {
+      new CrawlDriver(spark, lake, pagesDf, robotsDs, CrawlConfig(enrich = enrich)); ()
+    }
+    def tmp(): String = Files.createTempDirectory("graft-layout").toString
+    val mismatches = Seq(
+      "enrich over a plain crawl lake" -> (() =>
+        construct(CrawlLake.forCrawl(tmp(), spark, buckets = 8), enrich = true)),
+      "no enrich over an enriched crawl lake" -> (() =>
+        construct(CrawlLake.forCrawl(tmp(), spark, buckets = 8, enrich = true), enrich = false)),
+      "a lake with no bucketed tables" -> (() => construct(CrawlLake(tmp(), spark), enrich = false)))
+    mismatches.foreach { case (what, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("CrawlLake.forCrawl"), s"$what: ${e.getMessage}")
+    }
+    // the matching layouts construct
+    construct(CrawlLake.forCrawl(tmp(), spark, buckets = 8), enrich = false)
+    construct(CrawlLake.forCrawl(tmp(), spark, buckets = 8, enrich = true), enrich = true)
+  }
+
+  test("seen confirm join reads the bucketed frontier with no exchange on its side") {
+    // the tick's exact confirm anti-joins the probed candidates against the
+    // frontier; with broadcasts off it is a sort-merge join whose frontier
+    // side is the bucketed scan itself — only the candidates shuffle
+    val cfg = CrawlConfig(budget = 2, seenPartitions = 8, expectedPerSegment = 4096)
+    val (driver, lake) = newDriver(cfg)
+    driver.init(PageSynth.seeds(N, 3))
+    driver.run(2)
+    val candidates = spark.createDataset((0L until N).map { i =>
+      val u = UrlCanonicalizer.canonicalize(PageSynth.url(i))
+      graft.model.FrontierEntry(UrlCanonicalizer.urlHash(u), u, UrlCanonicalizer.host(u),
+        1, ReferenceSimulator.tickTs(3), i, 0L, 1.0)
+    })
+    val segments = lake.read(
+      "seen", org.apache.spark.sql.Encoders.product[graft.seen.SeenSet.Segment].schema)
+      .as[graft.seen.SeenSet.Segment]
+    val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val fresh = graft.seen.SeenSet.filterNew(
+        candidates, segments, driver.frontier.select("url_hash"), cfg.seenPartitions)
+      val plan = fresh.queryExecution.executedPlan
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+      object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      val smjs = PlanWalk.collect(plan) { case j: SortMergeJoinExec => j }
+      assert(smjs.size == 1, plan)
+      val frontierSide = smjs.head.right
+      assert(frontierSide.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"the frontier side of the confirm join shuffles:\n$plan")
+      val scans = frontierSide.collect { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty && scans.forall(_.bucketedScan), s"want a bucketed frontier scan:\n$plan")
+      assert(smjs.head.left.collect { case e: ShuffleExchangeExec => e }.nonEmpty,
+        s"the probe side should be the one that exchanges:\n$plan")
+      val exact = graft.seen.SeenSet.filterNewExact(candidates, driver.frontier.select("url_hash"))
+      assert(fresh.map(_.url_hash).collect().toSet == exact.map(_.url_hash).collect().toSet)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+  }
+
+  test("a crashed attempt's partitions of an empty tick's batch never become visible") {
+    // crawl until the next tick is empty, then plant a copy of a committed
+    // partition of every bucketed table under that next batch id, as a
+    // crash after the writes but before the manifest flip leaves it
+    val cfg = CrawlConfig(budget = 1000, seenPartitions = 8, expectedPerSegment = 4096, maxDepth = 0)
+    val (driver, lake) = newDriver(cfg)
+    driver.init(PageSynth.seeds(N, 10))
+    val stats = driver.run(10)
+    assert(stats.last.scheduled == 0L && stats.exists(_.fetched > 0), stats)
+    def counts(d: CrawlDriver): Seq[Long] =
+      Seq(d.frontier.count(), d.fetchLog.count(), d.extracted.count())
+    val committed = counts(driver)
+    val next = stats.last.batchId + 1
+    val tables = lake.bucketed.keys.toSeq.sorted
+    tables.foreach { t =>
+      val dir = java.nio.file.Paths.get(lake.root, "bucketed", t)
+      val src = dir.resolve(s"_pbatch=${lake.partitionIds(t).max}")
+      val dst = Files.createDirectories(dir.resolve(s"_pbatch=$next"))
+      scala.util.Using.resource(Files.list(src))(_.iterator().forEachRemaining { f =>
+        Files.copy(f, dst.resolve(f.getFileName)); ()
+      })
+    }
+    // a fresh lake object over the same root registers the planted partitions
+    val reopened = CrawlLake.forCrawl(lake.root, spark, buckets = 8)
+    tables.foreach(t => assert(reopened.partitionIds(t).contains(next), t))
+    val resumed = new CrawlDriver(
+      spark, reopened, spark.createDataFrame(corpus.map(_.page)),
+      spark.createDataset(robotsEntries), cfg)
+    val s = resumed.tick()
+    assert(s.batchId == next && s.scheduled == 0L, s)
+    assert(counts(resumed) == committed)
+    tables.foreach(t => assert(!reopened.partitionIds(t).contains(next), t))
   }
 
   test("resuming with a different seenPartitions fails fast (seen-geometry drift guard)") {

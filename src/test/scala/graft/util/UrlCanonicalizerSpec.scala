@@ -1,5 +1,7 @@
 package graft.util
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 class UrlCanonicalizerSpec extends AnyFunSuite {
@@ -72,6 +74,24 @@ class UrlCanonicalizerSpec extends AnyFunSuite {
     assert(resolve(base, "ftp://files.com/a") == "ftp://files.com/a")
     // trailing-slash relative href keeps its query after the dir slash
     assert(resolve(base, "sub/?x=1") == "https://h.com/dir/sub/?x=1")
+  }
+
+  // dedup keys on url_hash and stores the canonical url: a stored url must
+  // canonicalize to itself, so it hashes back to the same url_hash
+  test("canonicalization is idempotent") {
+    val urlGen = for {
+      scheme <- Gen.oneOf("http", "HTTP", "https")
+      host <- Gen.oneOf("Example.com", "a.b.c", "HOST.io:8080", "x.com:80")
+      path <- Gen.oneOf("", "/", "/A/b", "/p//q", "/x%20y")
+      query <- Gen.oneOf("", "?b=2&a=1", "?flag&z=9&a", "?")
+      frag <- Gen.oneOf("", "#f", "#a?b")
+    } yield s"$scheme://$host$path$query$frag"
+    val urls = Gen.listOfN(300, urlGen).apply(Gen.Parameters.default, Seed(11L)).get
+    urls.foreach { u =>
+      val once = canonicalize(u)
+      assert(canonicalize(once) == once, s"not idempotent: $u -> $once")
+      assert(urlHash(once) == urlHash(u), s"stored form re-hashes differently: $u -> $once")
+    }
   }
 
   test("urlHash is canonical-form-invariant") {
