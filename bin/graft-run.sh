@@ -17,6 +17,7 @@ ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $ADD_OPENS \
   -Xmx"${GRAFT_MEM:-8g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Duser.language=en -Duser.country=US \
   ${GRAFT_JAVA_OPTS:-} \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"

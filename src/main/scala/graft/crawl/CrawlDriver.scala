@@ -113,7 +113,9 @@ final case class TickStats(
   *    Bloom segments;
   *  - `fetch_log` lineage: every scheduled URL with status/bytes/partition;
   *    PENDING = frontier ∖ fetch_log, so state is derived, never mutated;
-  *  - `extracted` deterministic text+KV per fetched page.
+  *  - `extracted` deterministic text+KV per fetched page;
+  *  - the snapshot property [[SeenSet.PartitionsProperty]]: the P that
+  *    `seen` was built with, checked when a driver resumes.
   *
   * Scale shape per tick (10^10 frontier, 100 TB pages):
   *  1. pending: anti-join frontier ∖ fetch_log — with [[CrawlLake.forCrawl]]
@@ -164,20 +166,14 @@ final class CrawlDriver(
   // (or no) segment — seen URLs probe maybe=false, skip the exact confirm,
   // and are silently readmitted (duplicate crawling, duplicate frontier
   // rows). Growing P passes every range check, so nothing downstream would
-  // catch it (round-5 review). init() records P; resume validates it.
-  // Lakes created before this record skip the check (tolerant), as do
-  // fresh lakes (the file is written by init).
-  private val seenMetaPath = java.nio.file.Paths.get(lake.root, "seen_meta.json")
-  locally {
-    if (java.nio.file.Files.exists(seenMetaPath)) {
-      val txt = java.nio.file.Files.readString(seenMetaPath)
-      "\"p\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt).foreach { stored =>
-        require(stored == cfg.seenPartitions,
-          s"seen set was built with seenPartitions=$stored but this driver is configured " +
-            s"with ${cfg.seenPartitions} — the partitioned probe would silently mis-route; " +
-            "resume with the original P (or rebuild the seen set from the frontier)")
-      }
-    }
+  // catch it (round-5 review). init() and SeenRebuild commit P as a
+  // snapshot property in the same commit that writes the segments; a fresh
+  // lake, or one whose manifest has no such property, skips the check.
+  lake.latestSnapshotId.flatMap(lake.properties(_).get(SeenSet.PartitionsProperty)).foreach { stored =>
+    require(stored.toInt == cfg.seenPartitions,
+      s"seen set was built with seenPartitions=$stored but this driver is configured " +
+        s"with ${cfg.seenPartitions} — the partitioned probe would silently mis-route; " +
+        "resume with the original P (or rebuild the seen set from the frontier)")
   }
 
   private val frontierSchema = Encoders.product[FrontierEntry].schema
@@ -221,8 +217,7 @@ final class CrawlDriver(
 
   /** CDC view for downstream training pipelines: every extraction committed
     * AFTER `sinceSnapshotId`, up to `untilSnapshotId` (default: latest) —
-    * the E2-parity delta read (`frontierDeltaStream` is the streaming twin
-    * for frontier; this is the batch twin for the PRODUCT table). A
+    * the E2-parity delta read ([[frontierSince]] is its frontier twin). A
     * consumer that processed snapshot s re-syncs with exactly
     * `extractedSince(s)` instead of re-reading the 10^10-row table.
     *
@@ -301,14 +296,8 @@ final class CrawlDriver(
     val frontierDf = spark.createDataset(distinctSeeds).toDF()
     val segments = SeenSet.buildDeltaSegments(
       frontierDf.select("url_hash"), cfg.seenPartitions, cfg.expectedPerSegment)
-    val snap =
-      lake.commit(0L, appends = Map("frontier" -> frontierDf), replaces = Map("seen" -> segments.toDF()))
-    // record the seen-set geometry for the resume-time drift guard above —
-    // AFTER the snapshot-0 commit succeeds: a meta file describing a failed
-    // (effectively empty) commit would make a later driver with different
-    // seenPartitions fail the drift guard spuriously (round-5 advisor)
-    java.nio.file.Files.writeString(seenMetaPath, s"""{"p":${cfg.seenPartitions}}""")
-    snap
+    lake.commit(0L, appends = Map("frontier" -> frontierDf), replaces = Map("seen" -> segments.toDF()),
+      properties = Map(SeenSet.PartitionsProperty -> cfg.seenPartitions.toString))
   }
 
   /** One micro-batch. Returns stats; commits snapshot batchId atomically. */
@@ -521,19 +510,8 @@ final class CrawlDriver(
           admittedNew = admittedCount)
       } else TickStats(batchId, scheduledCount, scheduledCount, 0L, 0L, admittedCount)
 
-    // seen-set maintenance: exact delta lists per tick, folded into the
-    // filter segments every seenCompactEvery ticks (judge item 4: a full
-    // P-segment rewrite per tick was delta-independent write amplification;
-    // 0 = never fold, matching lakeCompactEvery's 0-is-off convention)
-    val deltaSegments = SeenSet.buildDeltaList(fresh.select("url_hash"), cfg.seenPartitions)
-    val compactTick = cfg.seenCompactEvery > 0 && batchId % cfg.seenCompactEvery.toLong == 0L
     val (seenAppend, seenReplace) =
-      if (compactTick)
-        (Map.empty[String, DataFrame],
-          Map("seen" -> SeenSet.mergeSegments(
-            seenSegments, deltaSegments, cfg.expectedPerSegment).toDF()))
-      else (Map("seen" -> deltaSegments.toDF()), Map.empty[String, DataFrame])
-
+      seenWrite(batchId, Some(SeenSet.buildDeltaList(fresh.select("url_hash"), cfg.seenPartitions)))
     lake.commit(
       batchId,
       appends = Map(
@@ -560,6 +538,21 @@ final class CrawlDriver(
     if (cfg.lakeCompactEvery > 0 && batchId % cfg.lakeCompactEvery.toLong == 0L)
       lake.bucketed.keys.toSeq.sorted.foreach(lake.compactBucketed)
 
+  /** The tick's `seen` write as (appends, replaces), shared by the full and
+    * empty tick paths: the tick's exact delta lists are appended, and every
+    * `seenCompactEvery` ticks one replace folds them into the filter
+    * segments instead (a full P-segment rewrite per tick was
+    * delta-independent write amplification; 0 = never fold, matching
+    * lakeCompactEvery's 0-is-off convention). An empty tick has no `delta`,
+    * so unless it compacts it writes nothing. */
+  private def seenWrite(
+      batchId: Long,
+      delta: Option[Dataset[SeenSet.Segment]]): (Map[String, DataFrame], Map[String, DataFrame]) =
+    if (cfg.seenCompactEvery > 0 && batchId % cfg.seenCompactEvery.toLong == 0L)
+      (Map.empty, Map("seen" -> SeenSet.mergeSegments(
+        seenSegments, delta.getOrElse(SeenSet.emptySegments(spark)), cfg.expectedPerSegment).toDF()))
+    else (delta.map(d => "seen" -> d.toDF()).toMap, Map.empty)
+
   /** Empty-schedule tick: identical snapshot TRAJECTORY to the full path on
     * empty inputs, with zero Spark write jobs on non-compact ticks — the
     * commit writes no bucketed table (it scrubs each one's crash leftover
@@ -568,12 +561,8 @@ final class CrawlDriver(
     * folds the accumulated delta lists into filter segments (an empty
     * delta changes nothing about that fold). */
   private def commitEmptyTick(batchId: Long): TickStats = {
-    val compactTick = cfg.seenCompactEvery > 0 && batchId % cfg.seenCompactEvery.toLong == 0L
-    val seenReplace =
-      if (!compactTick) Map.empty[String, DataFrame]
-      else Map("seen" -> SeenSet.mergeSegments(
-        seenSegments, SeenSet.emptySegments(spark), cfg.expectedPerSegment).toDF())
-    lake.commit(batchId, appends = Map.empty, replaces = seenReplace)
+    val (seenAppend, seenReplace) = seenWrite(batchId, None)
+    lake.commit(batchId, appends = seenAppend, replaces = seenReplace)
     compactLakeIfDue(batchId)
     TickStats(batchId, 0L, 0L, 0L, 0L, 0L)
   }

@@ -30,7 +30,7 @@ import graft.functions.GraftFunctions.bound_value
   * {{{
   * root/
   *   data/<table>/batch-<id>/part-*.parquet   // spark write output dirs
-  *   snapshots/v<N>.json                      // manifest: table -> [data dirs]
+  *   snapshots/v<N>.json                      // manifest: table -> [data dirs], properties
   *   snapshots/LATEST                         // current snapshot id (atomic move)
   * }}}
   *
@@ -38,6 +38,11 @@ import graft.functions.GraftFunctions.bound_value
   * each dir all-or-nothing), (2) write v<N>.json, (3) atomically move a tmp
   * file onto LATEST. A crash before (3) leaves orphan data dirs that no
   * manifest references — invisible to readers, GC-able.
+  *
+  * Snapshot properties: each manifest carries a string map (Iceberg's table
+  * metadata `properties`) that a commit inherits from the previous snapshot
+  * and overrides key by key, so a fact about the lake's state — the seen
+  * set's partition count — commits atomically with the data it describes.
   *
   * Append vs replace per dir table: `append` tables accumulate dirs across
   * snapshots; `replace` tables list only the newest dirs. In the crawl
@@ -86,14 +91,13 @@ final class CrawlLake(
   // it), while _pbatch is storage lineage that compaction may relabel.
   bucketed.foreach { case (table, spec) =>
     val ddlCols = (spec.schema.fields.map(f => s"${f.name} ${f.dataType.sql}") :+ "_pbatch BIGINT").mkString(", ")
-    val loc = rootPath.resolve("bucketed").resolve(table).toAbsolutePath
+    val loc = Files.createDirectories(rootPath.resolve("bucketed").resolve(table)).toAbsolutePath
     spark.sql(
       s"""CREATE TABLE IF NOT EXISTS ${catalogName(table)} ($ddlCols)
          |USING parquet PARTITIONED BY (_pbatch)
          |CLUSTERED BY (${spec.bucketCol}) SORTED BY (${spec.bucketCol}) INTO ${spec.numBuckets} BUCKETS
          |LOCATION '$loc'""".stripMargin)
-    try spark.catalog.recoverPartitions(catalogName(table))
-    catch { case _: Exception => () } // empty location: nothing to recover
+    spark.catalog.recoverPartitions(catalogName(table))
   }
 
   def latestSnapshotId: Option[Long] = {
@@ -173,14 +177,23 @@ final class CrawlLake(
     }
   }
 
+  /** Snapshot `id`'s properties; empty when its manifest records none. */
+  def properties(id: Long): Map[String, String] =
+    Option(manifestNode(id).get("properties")).map { p =>
+      p.fieldNames().asScala.map(k => k -> p.get(k).asText()).toMap
+    }.getOrElse(Map.empty)
+
   /** Atomically commit the next snapshot.
-    * @param appends  table -> DataFrame to append (new dirs + inherited dirs)
-    * @param replaces table -> DataFrame replacing the table's content
+    * @param appends    table -> DataFrame to append (new dirs + inherited dirs)
+    * @param replaces   table -> DataFrame replacing the table's content
+    * @param properties keys to set in this snapshot's properties, over those
+    *                   inherited from the previous snapshot
     */
   def commit(
       batchId: Long,
       appends: Map[String, DataFrame],
-      replaces: Map[String, DataFrame] = Map.empty): Long = {
+      replaces: Map[String, DataFrame] = Map.empty,
+      properties: Map[String, String] = Map.empty): Long = {
     val prevId = latestSnapshotId
     val nextId = prevId.map(_ + 1).getOrElse(0L)
     val prev: Map[String, Vector[String]] = prevId.map(manifest).getOrElse(Map.empty)
@@ -232,7 +245,8 @@ final class CrawlLake(
       case (t, dirs) => if (!bucketed.contains(t)) updated(t) = dirs
     }
 
-    publishSnapshot(nextId, batchId, updated.toMap, prevId.map(compactMeta).getOrElse(Map.empty))
+    publishSnapshot(nextId, batchId, updated.toMap, prevId.map(compactMeta).getOrElse(Map.empty),
+      prevId.map(this.properties).getOrElse(Map.empty) ++ properties)
     nextId
   }
 
@@ -255,7 +269,8 @@ final class CrawlLake(
       nextId: Long,
       batchId: Long,
       tables: Map[String, Vector[String]],
-      compact: Map[String, (Long, Long)]): Unit = {
+      compact: Map[String, (Long, Long)],
+      properties: Map[String, String]): Unit = {
     val rootNode = mapper.createObjectNode()
     rootNode.put("id", nextId)
     rootNode.put("batch_id", batchId)
@@ -271,6 +286,10 @@ final class CrawlLake(
         o.put("compact_id", cid)
         o.put("through", through)
       }
+    }
+    if (properties.nonEmpty) {
+      val pNode = rootNode.putObject("properties")
+      properties.toSeq.sorted.foreach { case (k, v) => pNode.put(k, v) }
     }
     Files.writeString(manifestPath(nextId), mapper.writerWithDefaultPrettyPrinter().writeValueAsString(rootNode))
 
@@ -347,7 +366,8 @@ final class CrawlLake(
     publishSnapshot(
       newId, committed,
       manifest(latest),
-      meta + (table -> (newId, committed)))
+      meta + (table -> (newId, committed)),
+      properties(latest))
     // superseded partitions are now invisible — reclaim them
     val keep = -newId
     partitionIds(table).filter(_ != keep)

@@ -42,21 +42,6 @@ object QualityModel {
     StructField("n_tokens", IntegerType, nullable = false),
     StructField("score", LongType, nullable = false)))
 
-  /** split on single spaces, trailing empties preserved —
-    * `norm.split(" ", -1)` ≡ DuckDB string_split semantics. */
-  private def splitTokens(norm: String): Array[String] = {
-    val out = new scala.collection.mutable.ArrayBuffer[String]()
-    var start = 0
-    var i = 0
-    val n = norm.length
-    while (i < n) {
-      if (norm.charAt(i) == ' ') { out += norm.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += norm.substring(start, n)
-    out.toArray
-  }
-
   private val hexDigits = "0123456789abcdef".toCharArray
 
   /** w(tok) for one token: first 16 bits of md5(seed || '|' || tok),
@@ -75,7 +60,7 @@ object QualityModel {
   }
 
   def scoreRow(t: org.apache.spark.unsafe.types.UTF8String, seed: String): GenericInternalRow = {
-    val tokens = splitTokens(TextEnrich.normText(t.toString))
+    val tokens = TextEnrich.splitTokens(TextEnrich.normText(t.toString))
     var score = 0L
     var i = 0
     while (i < tokens.length) {

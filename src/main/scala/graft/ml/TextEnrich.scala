@@ -138,10 +138,12 @@ object TextEnrich {
     var e = text.length
     while (s < e && text.charAt(s) == ' ') s += 1
     while (e > s && text.charAt(e - 1) == ' ') e -= 1
-    // Locale.ROOT: default-locale toLowerCase breaks the bit-parity
-    // contract with Spark's locale-independent lower() under e.g. a
-    // Turkish JVM locale (I → ı), and made results differ across
-    // executors with different locales (round-5 review)
+    // Locale.ROOT: the kernel is root-locale, as DuckDB's oracle is, so
+    // executors with different JVM locales agree (a Turkish locale maps
+    // I → ı). Spark's lower() is NOT locale-independent: for any non-ASCII
+    // string UTF8String.toLowerCaseSlow calls String.toLowerCase() with the
+    // JVM default locale, so it matches this kernel only under a root-like
+    // default locale (build.sbt and bin/graft-run.sh pin en_US)
     val lowered = text.substring(s, e).toLowerCase(java.util.Locale.ROOT)
     val n = lowered.length
     val sb = new java.lang.StringBuilder(n)
@@ -159,6 +161,21 @@ object TextEnrich {
     }
     if (pendingWs) sb.append(' ')
     sb.toString
+  }
+
+  /** split on single spaces, trailing empties preserved —
+    * `norm.split(" ", -1)` semantics, matching DuckDB string_split. */
+  private[ml] def splitTokens(norm: String): Array[String] = {
+    val out = new scala.collection.mutable.ArrayBuffer[String]()
+    var start = 0
+    var i = 0
+    val n = norm.length
+    while (i < n) {
+      if (norm.charAt(i) == ' ') { out += norm.substring(start, i); start = i + 1 }
+      i += 1
+    }
+    out += norm.substring(start, n)
+    out.toArray
   }
 
   /** `size(split(trim(text), " +"))`: count of maximal non-space runs in
@@ -286,11 +303,12 @@ case class AnalyzeText(child: Expression) extends UnaryExpression {
 
 /** `norm_text(text)` → the engine-wide whitespace/case normal form —
   * [[TextEnrich.normText]] as a codegen'd expression. Exactly
-  * `regexp_replace(lower(trim(text)), "\\s+", " ")` (the parity the kernel
-  * was built for, spec-asserted), minus the java.util.regex pass: measured
-  * at sf0.1 the regex was the single hottest expression in the bench (it
-  * sits under every md5 fingerprint, token split, pack, keyword and chunk
-  * query). */
+  * `regexp_replace(lower(trim(text)), "\\s+", " ")` under a root-like JVM
+  * default locale (the parity the kernel was built for, spec-asserted; the
+  * kernel itself is root-locale in any JVM locale), minus the
+  * java.util.regex pass: measured at sf0.1 the regex was the single hottest
+  * expression in the bench (it sits under every md5 fingerprint, token
+  * split, pack, keyword and chunk query). */
 case class NormText(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true

@@ -45,21 +45,6 @@ object TextRepetition {
     StructField("n_distinct_trigrams", IntegerType, nullable = false),
     StructField("top_trigram_count", IntegerType, nullable = false)))
 
-  /** split on single spaces, trailing empties preserved —
-    * `norm.split(" ", -1)` semantics, matching DuckDB string_split. */
-  private def splitTokens(norm: String): Array[String] = {
-    val out = new scala.collection.mutable.ArrayBuffer[String]()
-    var start = 0
-    var i = 0
-    val n = norm.length
-    while (i < n) {
-      if (norm.charAt(i) == ' ') { out += norm.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += norm.substring(start, n)
-    out.toArray
-  }
-
   /** (distinct count, top multiplicity) of the k-gram multiset. */
   private def gramStats(tokens: Array[String], k: Int): (Int, Int) = {
     val n = tokens.length - (k - 1)
@@ -92,7 +77,7 @@ object TextRepetition {
   def ngramArray(
       t: org.apache.spark.unsafe.types.UTF8String,
       n: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val tokens = splitTokens(TextEnrich.normText(t.toString))
+    val tokens = TextEnrich.splitTokens(TextEnrich.normText(t.toString))
     val count = tokens.length - (n - 1)
     if (count <= 0)
       new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
@@ -111,7 +96,7 @@ object TextRepetition {
   }
 
   def statsRow(t: org.apache.spark.unsafe.types.UTF8String): GenericInternalRow = {
-    val tokens = splitTokens(TextEnrich.normText(t.toString))
+    val tokens = TextEnrich.splitTokens(TextEnrich.normText(t.toString))
     val (d1, t1) = gramStats(tokens, 1)
     val (d2, t2) = gramStats(tokens, 2)
     val (d3, t3) = gramStats(tokens, 3)

@@ -41,6 +41,11 @@ object SeenSet {
     * exercise multi-segment paths. */
   val DefaultPartitions = 64
 
+  /** Snapshot property recording the P that the lake's `seen` segments were
+    * built with, committed with them; `CrawlDriver` refuses to resume with a
+    * different P. */
+  val PartitionsProperty = "seen.partitions"
+
   final case class Segment(partition_id: Int, segment: Array[Byte], n_items: Long)
 
   def emptySegments(spark: SparkSession): Dataset[Segment] = {

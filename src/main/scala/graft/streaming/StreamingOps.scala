@@ -1,39 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.model.FrontierEntry
-
-/** Structured-Streaming form of the engine's event edges (SURVEY.md §1.2
-  * E1–E4): the reference's arrival-driven Lambda chain becomes streaming
-  * micro-batches. The batch `CrawlDriver` stays the primary engine (its
-  * deterministic snapshot loop is what the resume/ordering guarantees are
-  * proven on); these operators are the streaming-native counterparts for
-  * continuous ingestion.
+/** Structured-Streaming operators that keep no crawl state of their own.
+  * The crawl's only durable state is the lake snapshot: continuous crawling
+  * is [[StreamingCrawl.start]] driving `CrawlDriver.tick()` (politeness via
+  * `Politeness.schedule` and `CrawlConfig.hostCooldownTicks`, both derived
+  * from the lake), and snapshot-consistent deltas are the batch CDC reads
+  * `CrawlDriver.frontierSince` / `extractedSince`.
   */
 object StreamingOps {
-
-  /** E2-analog: a continuous stream of frontier deltas (new discoveries
-    * landing as files under the lake's frontier dir) — replaces the
-    * DynamoDB stream + `TRIM_HORIZON` + `batchSize: 1` consumption
-    * (`stack.ts:172-177`) with whole-delta micro-batches.
-    *
-    * SCOPE (round-5 review): this is a PATH-level file source — it tracks
-    * data files, not lake snapshots, so it is only delta-correct over a
-    * directory whose files are immutable-once-written and appended on
-    * commit. The crawl lake's bucketed frontier is not one: a compaction
-    * REWRITES every visible row into a fresh partition, which this source
-    * would re-emit as 10^10 "new" deltas, and files land before the
-    * manifest flips (a crashed commit's files are visible).
-    * Snapshot-consistent consumers use the batch CDC views —
-    * `CrawlDriver.extractedSince` / `frontierSince` — which read through
-    * the lake's MVCC layer. */
-  def frontierDeltaStream(spark: SparkSession, frontierDir: String): DataFrame =
-    spark.readStream
-      .schema(Encoders.product[FrontierEntry].schema)
-      .parquet(frontierDir)
 
   /** Windowed fetch-rate metrics with a watermark — the engine's
     * CloudWatch-replacement over `fetch_log` as a stream. */
@@ -45,71 +22,4 @@ object StreamingOps {
         count(lit(1)).as("fetches"),
         sum(col("bytes")).as("bytes"),
         sum(when(col("status") =!= 200, 1).otherwise(0)).as("failures"))
-
-  final case class HostBudgetState(admitted: Long)
-  final case class Admission(url_hash: Long, url: String, host: String, admitted: Boolean)
-
-  /** Streaming politeness: stateful per-host admission budget via
-    * `flatMapGroupsWithState` — the KeyValueGroupedDataset custom-state
-    * form of the batch ranked-window budget. Each host's running admitted
-    * count persists across micro-batches (generalizes the reference's
-    * per-tick `slice(0, 5)` into a durable per-host quota). */
-  def statefulPoliteness(
-      deltas: Dataset[FrontierEntry],
-      budgetPerHost: Long): Dataset[Admission] = {
-    import deltas.sparkSession.implicits._
-    deltas
-      .groupByKey(_.host)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (host: String, rows: Iterator[FrontierEntry], state: GroupState[HostBudgetState]) => {
-          var admitted = state.getOption.map(_.admitted).getOrElse(0L)
-          // deterministic order within the micro-batch: schedule chain
-          val ordered = rows.toSeq.sortBy(e =>
-            (e.priority, e.depth, e.discovery_ts.getTime, e.seq_in_page, e.url_hash))
-          val out = ordered.map { e =>
-            val ok = admitted < budgetPerHost
-            if (ok) admitted += 1
-            Admission(e.url_hash, e.url, host, ok)
-          }
-          state.update(HostBudgetState(admitted))
-          out.iterator
-        })
-  }
-
-  final case class HostTokens(tokens: Double)
-
-  /** Streaming-native cross-trigger host rate limiter (round-2 judge item
-    * 5): a per-host token bucket carried in stream state. Each micro-batch
-    * refills `refillPerBatch` tokens up to `burst`; an admission spends one
-    * token, so a host averages refillPerBatch fetches per trigger with
-    * bounded bursts — E1-parity politeness when triggers fire faster than
-    * the politeness interval. Deterministic: state is a pure function of
-    * the micro-batch sequence (no wall clock), matching the engine's
-    * resume-exactness rules; the batch engine's lake-derived counterpart is
-    * [[graft.crawl.CrawlConfig.hostCooldownTicks]]. */
-  def statefulRateLimit(
-      deltas: Dataset[FrontierEntry],
-      refillPerBatch: Double,
-      burst: Double): Dataset[Admission] = {
-    import deltas.sparkSession.implicits._
-    deltas
-      .groupByKey(_.host)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (host: String, rows: Iterator[FrontierEntry], state: GroupState[HostTokens]) => {
-          // a first-seen host starts with a full bucket; refill applies on
-          // every later batch in which the host reappears
-          var tokens =
-            if (state.exists) math.min(burst, state.get.tokens + refillPerBatch)
-            else burst
-          val ordered = rows.toSeq.sortBy(e =>
-            (e.priority, e.depth, e.discovery_ts.getTime, e.seq_in_page, e.url_hash))
-          val out = ordered.map { e =>
-            val ok = tokens >= 1.0
-            if (ok) tokens -= 1.0
-            Admission(e.url_hash, e.url, host, ok)
-          }
-          state.update(HostTokens(tokens))
-          out.iterator
-        })
-  }
 }

@@ -35,8 +35,8 @@ object SeenRebuild {
   }
 
   /** Replace the `seen` table of the crawl lake at `lakeDir` with segments
-    * rebuilt from its frontier, and re-record `seen_meta.json` so the
-    * driver's resume drift guard matches. Returns the new snapshot id; the
+    * rebuilt from its frontier, committing `p` as the snapshot property the
+    * driver's resume drift guard checks. Returns the new snapshot id; the
     * commit takes the next batch id, so the crawl's next tick is one batch
     * later than it would have been. */
   def rebuild(
@@ -49,9 +49,7 @@ object SeenRebuild {
     val frontier = lake.read("frontier", Encoders.product[FrontierEntry].schema)
     val segments = SeenSet.buildDeltaSegments(frontier.select("url_hash"), p, expectedPerSegment)
     val batchId = lake.latestSnapshotId.map(id => lake.batchIdOf(id) + 1).getOrElse(0L)
-    val snap = lake.commit(batchId, appends = Map.empty, replaces = Map("seen" -> segments.toDF()))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(lakeDir, "seen_meta.json"), s"""{"p":$p}""")
-    snap
+    lake.commit(batchId, appends = Map.empty, replaces = Map("seen" -> segments.toDF()),
+      properties = Map(SeenSet.PartitionsProperty -> p.toString))
   }
 }

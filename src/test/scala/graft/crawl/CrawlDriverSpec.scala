@@ -2,6 +2,8 @@ package graft.crawl
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -551,14 +553,32 @@ class CrawlDriverSpec extends AnyFunSuite {
     // already-seen URLs (candidates cogrouped with the wrong segment)
     val root = Files.createTempDirectory("graft-pdrift").toString
     val pagesDf = spark.createDataFrame(corpus.map(_.page))
-    val robotsDs = spark.createDataset(Seq.empty[graft.model.RobotsEntry])
+    val robotsDs = spark.createDataset(robotsEntries)
     def mk(p: Int) = new CrawlDriver(
       spark, CrawlLake.forCrawl(root, spark, buckets = 8), pagesDf, robotsDs,
-      CrawlConfig(budget = 2, seenPartitions = p, expectedPerSegment = 4096))
+      CrawlConfig(budget = 2, seenPartitions = p, expectedPerSegment = 4096, seenCompactEvery = 2))
+    def assertGuardFires(): Unit = {
+      val e = intercept[IllegalArgumentException](mk(16))
+      assert(e.getMessage.contains("seenPartitions=8"))
+    }
     mk(8).init(PageSynth.seeds(N, 3))
-    val e = intercept[IllegalArgumentException](mk(16))
-    assert(e.getMessage.contains("seenPartitions=8"))
-    mk(8).tick() // same P resumes fine
+    // a record of P in a side file written after the commit is lost by a
+    // crash between the two: delete every file directly under the lake
+    // root, so the guard has only the committed snapshot to read
+    val rootFiles = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(root)))(
+      _.iterator().asScala.filter(Files.isRegularFile(_)).toVector)
+    rootFiles.foreach(Files.delete)
+    assertGuardFires()
+    assert(rootFiles.isEmpty, s"init wrote crawl state outside the snapshot: $rootFiles")
+
+    // the same P resumes; batch 2 folds the delta lists (seen compaction),
+    // then every bucketed table is compacted: the guard still fires
+    assert(mk(8).run(2).forall(_.scheduled > 0))
+    val lake = CrawlLake.forCrawl(root, spark, buckets = 8)
+    assert(lake.manifest(lake.latestSnapshotId.get)("seen").size == 1)
+    lake.bucketed.keys.toSeq.sorted.foreach(lake.compactBucketed)
+    assertGuardFires()
+    assert(mk(8).tick().scheduled > 0)
   }
 
   test("frontierSince: admission delta == key-set diff; expired base throws, never lies") {

@@ -94,6 +94,28 @@ class CrawlLakeSpec extends AnyFunSuite {
     intercept[IllegalStateException](lake.read("t", schema, Some(firstCompactSnap)).count())
   }
 
+  test("snapshot properties are inherited, overridden key by key, and survive compaction") {
+    val root = Files.createTempDirectory("lake-spec8").toString
+    val lake = new CrawlLake(root, spark, Map(
+      "t" -> CrawlLake.BucketedTableSpec(schema, "url_hash", 4)))
+    val s0 = lake.commit(0L, appends = Map("t" -> df(1L -> "a")))
+    assert(lake.properties(s0).isEmpty)
+    assert(!Files.readString(Paths.get(root, "snapshots", s"v$s0.json")).contains("properties"))
+    val s1 = lake.commit(1L, appends = Map("t" -> df(2L -> "b")), properties = Map("k" -> "1", "j" -> "x"))
+    val s2 = lake.commit(2L, appends = Map.empty)
+    val s3 = lake.commit(3L, appends = Map.empty, properties = Map("k" -> "2"))
+    assert(lake.properties(s1) == Map("k" -> "1", "j" -> "x"))
+    assert(lake.properties(s2) == Map("k" -> "1", "j" -> "x"))
+    assert(lake.properties(s3) == Map("k" -> "2", "j" -> "x"))
+    assert(lake.properties(s0).isEmpty) // earlier snapshots keep their own
+    val sc = lake.compactBucketed("t")
+    assert(lake.properties(sc) == Map("k" -> "2", "j" -> "x"))
+    val s5 = lake.commit(4L, appends = Map("t" -> df(3L -> "c")))
+    assert(lake.properties(s5) == Map("k" -> "2", "j" -> "x"))
+    // a fresh handle reads them back from the manifest on disk
+    assert(new CrawlLake(root, spark, lake.bucketed).properties(s5) == Map("k" -> "2", "j" -> "x"))
+  }
+
   test("manifest cache is evicted when gcOrphans tombstones a snapshot") {
     val lake = CrawlLake(Files.createTempDirectory("lake-spec7").toString, spark)
     lake.commit(0L, appends = Map("t" -> df(1L -> "a")))

@@ -113,6 +113,18 @@ class TextEnrichSpec extends AnyFunSuite {
     }
   }
 
+  test("norm_text is root-locale: a Turkish JVM default locale does not change it") {
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      assert("Ärger IN".toLowerCase == "ärger ın") // what a default-locale lowercase gives
+      assert(TextEnrich.normText("Ärger IN") == "ärger in")
+      val got = Seq("Ärger IN").toDF("text")
+        .select(TextEnrichFunctions.norm_text(col("text"))).as[String].head()
+      assert(got == "ärger in")
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("langId null-in behavior matches the declarative form ('und', not null)") {
     val df = Seq(Some("le la de et"), None).toDF("text")
     val fused = df.select(TextAnalysis.langId(col("text"))).collect().map(_.getString(0))

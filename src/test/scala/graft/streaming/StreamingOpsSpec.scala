@@ -7,125 +7,57 @@ import org.apache.spark.sql.Encoders
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.model.{FetchRecord, FrontierEntry}
+import graft.model.FetchRecord
 
 class StreamingOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def fe(h: Long, host: String, seq: Long): FrontierEntry =
-    FrontierEntry(h, s"https://$host/p$h", host, 1, new Timestamp(60000L), seq, 0L, 1.0)
-
-  test("stateful politeness budget persists across micro-batches") {
-    val dir = Files.createTempDirectory("graft-stream-frontier").toString
-    val sink = s"politeness_sink_${System.identityHashCode(this)}"
-
-    // batch 1: 5 rows for hostA, 2 for hostB
-    spark.createDataset(
-      (1L to 5L).map(i => fe(i, "a.com", i)) ++ (6L to 7L).map(i => fe(i, "b.com", i)))
-      .write.mode("append").parquet(dir)
-
-    val stream = StreamingOps.frontierDeltaStream(spark, dir).as[FrontierEntry]
-    val admissions = StreamingOps.statefulPoliteness(stream, budgetPerHost = 3L)
-    val q = admissions.writeStream
-      .format("memory").queryName(sink).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("graft-stream-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val afterB1 = spark.table(sink).where($"admitted").groupBy($"host").count()
-        .as[(String, Long)].collect().toMap
-      assert(afterB1("a.com") == 3L && afterB1("b.com") == 2L)
-
-      // batch 2: more rows for both hosts — a.com budget already exhausted,
-      // b.com has 1 left (state carried across micro-batches)
-      spark.createDataset(
-        (11L to 13L).map(i => fe(i, "a.com", i)) ++ (14L to 16L).map(i => fe(i, "b.com", i)))
-        .write.mode("append").parquet(dir)
-      q.processAllAvailable()
-      val afterB2 = spark.table(sink).where($"admitted").groupBy($"host").count()
-        .as[(String, Long)].collect().toMap
-      assert(afterB2("a.com") == 3L, s"budget leaked: $afterB2")
-      assert(afterB2("b.com") == 3L, s"state lost: $afterB2")
-    } finally q.stop()
-  }
-
-  test("stateful rate limiter: token bucket refills across micro-batches") {
-    val dir = Files.createTempDirectory("graft-stream-rate").toString
-    val sink = s"ratelimit_sink_${System.identityHashCode(this)}"
-
-    // batch 1: 4 rows for hostA; burst 2 admits exactly 2.
-    // Every append in this test is coalesce(1): the refill count is
-    // per-MICRO-BATCH, and a multi-file append whose files become visible
-    // across two stream listings splits into two micro-batches → two
-    // refills (the round-6 judge saw exactly that flake under suite load /
-    // this host's I/O-throttle windows). One file per append makes the
-    // batch grouping deterministic.
-    spark.createDataset((1L to 4L).map(i => fe(i, "a.com", i)))
-      .coalesce(1).write.mode("append").parquet(dir)
-    val stream = StreamingOps.frontierDeltaStream(spark, dir).as[FrontierEntry]
-    val admissions = StreamingOps.statefulRateLimit(stream, refillPerBatch = 1.0, burst = 2.0)
-    val q = admissions.writeStream
-      .format("memory").queryName(sink).outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("graft-stream-ckpt3").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      def admitted() = spark.table(sink).where($"admitted").count()
-      assert(admitted() == 2L, "burst cap")
-
-      // batch 2: bucket refilled by 1 → exactly one more admission
-      spark.createDataset((11L to 13L).map(i => fe(i, "a.com", i)))
-        .coalesce(1).write.mode("append").parquet(dir)
-      q.processAllAvailable()
-      assert(admitted() == 3L, "refill per micro-batch")
-
-      // batch 3: again +1 token → one more; average rate = refillPerBatch
-      spark.createDataset((21L to 23L).map(i => fe(i, "a.com", i)))
-        .coalesce(1).write.mode("append").parquet(dir)
-      q.processAllAvailable()
-      assert(admitted() == 4L)
-    } finally q.stop()
-  }
-
   test("streaming end-to-end crawl ≡ batch loop (one tick per micro-batch)") {
     val N = 150L
     val corpus = graft.synth.PageSynth.pages(N)
     val robots = graft.synth.PageSynth.robots()
-    val cfg = graft.crawl.CrawlConfig(budget = 2, seenPartitions = 8, expectedPerSegment = 4096)
-    def mkDriver(tag: String) = {
-      val lake = graft.lake.CrawlLake.forCrawl(
-        Files.createTempDirectory(s"graft-stream-$tag").toString, spark, buckets = 8)
-      val d = new graft.crawl.CrawlDriver(
-        spark, lake, spark.createDataFrame(corpus.map(_.page)),
-        spark.createDataset(robots)(Encoders.product[graft.model.RobotsEntry]), cfg)
-      d.init(graft.synth.PageSynth.seeds(N, 3))
-      d
+    // hostCooldownTicks = 1 covers continuous politeness: its per-host state
+    // is derived from the lake's fetch_log, never from the stream checkpoint
+    val orders = Seq(0, 1).map { cooldown =>
+      val cfg = graft.crawl.CrawlConfig(
+        budget = 2, seenPartitions = 8, expectedPerSegment = 4096, hostCooldownTicks = cooldown)
+      def mkDriver(tag: String) = {
+        val lake = graft.lake.CrawlLake.forCrawl(
+          Files.createTempDirectory(s"graft-stream-$tag").toString, spark, buckets = 8)
+        val d = new graft.crawl.CrawlDriver(
+          spark, lake, spark.createDataFrame(corpus.map(_.page)),
+          spark.createDataset(robots)(Encoders.product[graft.model.RobotsEntry]), cfg)
+        d.init(graft.synth.PageSynth.seeds(N, 3))
+        d
+      }
+
+      val batchDriver = mkDriver("batch")
+      batchDriver.run(3)
+
+      val streamDriver = mkDriver("cont")
+      val ticks = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long](spark)
+      val statsSeen = scala.collection.mutable.ArrayBuffer.empty[graft.crawl.TickStats]
+      val q = StreamingCrawl.start(
+        streamDriver, ticks.toDF(),
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
+        checkpointDir = Some(Files.createTempDirectory("graft-stream-crawl-ckpt").toString),
+        onTick = s => statsSeen.synchronized { statsSeen += s })
+      try {
+        // one tick per micro-batch: add → drain, three times (E1 schedule edges)
+        (1 to 3).foreach { i => ticks.addData(i.toLong); q.processAllAvailable() }
+      } finally q.stop()
+
+      assert(statsSeen.size == 3, s"cooldown $cooldown: expected 3 ticks, saw ${statsSeen.map(_.batchId)}")
+      def order(d: graft.crawl.CrawlDriver) =
+        d.crawlOrder().select("batch_id", "url_hash", "status")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toVector
+      assert(order(streamDriver) == order(batchDriver), s"cooldown $cooldown")
+      assert(streamDriver.frontier.select("url_hash").as[Long].collect().toSet ==
+        batchDriver.frontier.select("url_hash").as[Long].collect().toSet, s"cooldown $cooldown")
+      order(batchDriver)
     }
-
-    val batchDriver = mkDriver("batch")
-    batchDriver.run(3)
-
-    val streamDriver = mkDriver("cont")
-    val ticks = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long](spark)
-    val statsSeen = scala.collection.mutable.ArrayBuffer.empty[graft.crawl.TickStats]
-    val q = StreamingCrawl.start(
-      streamDriver, ticks.toDF(),
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
-      checkpointDir = Some(Files.createTempDirectory("graft-stream-crawl-ckpt").toString),
-      onTick = s => statsSeen.synchronized { statsSeen += s })
-    try {
-      // one tick per micro-batch: add → drain, three times (E1 schedule edges)
-      (1 to 3).foreach { i => ticks.addData(i.toLong); q.processAllAvailable() }
-    } finally q.stop()
-
-    assert(statsSeen.size == 3, s"expected 3 ticks, saw ${statsSeen.map(_.batchId)}")
-    def order(d: graft.crawl.CrawlDriver) =
-      d.crawlOrder().select("batch_id", "url_hash", "status")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toVector
-    assert(order(streamDriver) == order(batchDriver))
-    assert(streamDriver.frontier.select("url_hash").as[Long].collect().toSet ==
-      batchDriver.frontier.select("url_hash").as[Long].collect().toSet)
+    assert(orders(0) != orders(1), "the cooldown should change which hosts each tick fetches")
   }
 
   test("windowed fetch-rate aggregation over a fetch_log stream") {

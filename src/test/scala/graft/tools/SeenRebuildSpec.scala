@@ -21,7 +21,7 @@ class SeenRebuildSpec extends AnyFunSuite {
   private lazy val corpus = PageSynth.pages(N)
   private val cfg = CrawlConfig(budget = 2, seenPartitions = 8, expectedPerSegment = 4096)
 
-  private def driver(lake: CrawlLake): CrawlDriver =
+  private def driver(lake: CrawlLake, cfg: CrawlConfig = cfg): CrawlDriver =
     new CrawlDriver(spark, lake, spark.createDataFrame(corpus.map(_.page)),
       spark.createDataset(PageSynth.robots()), cfg)
 
@@ -34,37 +34,46 @@ class SeenRebuildSpec extends AnyFunSuite {
 
   test("rebuild of a bucketed crawl lake keeps every frontier hash and the crawl order") {
     val refLake = CrawlLake.forCrawl(Files.createTempDirectory("graft-rebuild-ref").toString, spark, Buckets)
-    val lake = CrawlLake.forCrawl(Files.createTempDirectory("graft-rebuild").toString, spark, Buckets)
     val straight = driver(refLake)
-    val before = driver(lake)
     try {
       straight.init(PageSynth.seeds(N, 3))
       straight.run(4)
-      before.init(PageSynth.seeds(N, 3))
-      before.run(2)
+      // rebuild at the crawl's own P, and at a new P: the resume guard moves
+      // to the rebuilt P, so a driver with any other P fails fast
+      for ((p, wrongP) <- Seq(cfg.seenPartitions -> 16, 16 -> cfg.seenPartitions)) {
+        val lake = CrawlLake.forCrawl(Files.createTempDirectory("graft-rebuild").toString, spark, Buckets)
+        val before = driver(lake)
+        try {
+          before.init(PageSynth.seeds(N, 3))
+          before.run(2)
 
-      SeenRebuild.rebuild(spark, lake.root, cfg.seenPartitions, cfg.expectedPerSegment, Buckets)
+          SeenRebuild.rebuild(spark, lake.root, p, cfg.expectedPerSegment, Buckets)
 
-      val frontierHashes = before.frontier.select("url_hash").as[Long].collect()
-      assert(frontierHashes.length > 10, "mid-crawl frontier should hold the seeds and more")
-      val probes = lake.read("seen", Encoders.product[SeenSet.Segment].schema).as[SeenSet.Segment]
-        .collect().groupBy(_.partition_id)
-        .map { case (pid, segs) => pid -> segs.map(s => SeenSegments.probeFn(s.segment)) }
-      frontierHashes.foreach { h =>
-        val pid = math.floorMod(h, cfg.seenPartitions.toLong).toInt
-        assert(probes.getOrElse(pid, Array.empty[Long => Boolean]).exists(_(h)),
-          s"rebuilt seen set misses frontier hash $h")
+          val frontierHashes = before.frontier.select("url_hash").as[Long].collect()
+          assert(frontierHashes.length > 10, "mid-crawl frontier should hold the seeds and more")
+          val probes = lake.read("seen", Encoders.product[SeenSet.Segment].schema).as[SeenSet.Segment]
+            .collect().groupBy(_.partition_id)
+            .map { case (pid, segs) => pid -> segs.map(s => SeenSegments.probeFn(s.segment)) }
+          frontierHashes.foreach { h =>
+            val pid = math.floorMod(h, p.toLong).toInt
+            assert(probes.getOrElse(pid, Array.empty[Long => Boolean]).exists(_(h)),
+              s"rebuilt seen set (P=$p) misses frontier hash $h")
+          }
+
+          val e = intercept[IllegalArgumentException](
+            driver(CrawlLake.forCrawl(lake.root, spark, Buckets), cfg.copy(seenPartitions = wrongP)))
+          assert(e.getMessage.contains(s"seenPartitions=$p"))
+          val after = driver(CrawlLake.forCrawl(lake.root, spark, Buckets), cfg.copy(seenPartitions = p))
+          after.run(2)
+          val dupKeys = after.frontier.groupBy("url_hash").count().where(col("count") > 1).count()
+          assert(dupKeys == 0L, s"P=$p: $dupKeys url_hash keys have more than one frontier row")
+          assert(ticks(after) == ticks(straight), s"P=$p")
+        } finally {
+          before.close(); lake.drop()
+        }
       }
-
-      val after = driver(CrawlLake.forCrawl(lake.root, spark, Buckets))
-      try {
-        after.run(2)
-        val dupKeys = after.frontier.groupBy("url_hash").count().where(col("count") > 1).count()
-        assert(dupKeys == 0L, s"$dupKeys url_hash keys have more than one frontier row")
-        assert(ticks(after) == ticks(straight))
-      } finally after.close()
     } finally {
-      straight.close(); before.close(); refLake.drop(); lake.drop()
+      straight.close(); refLake.drop()
     }
   }
 }
