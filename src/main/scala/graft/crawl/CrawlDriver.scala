@@ -107,10 +107,11 @@ final case class TickStats(
   * State model (all in [[CrawlLake]], committed atomically per tick):
   *  - `frontier`  append-only, exactly one row per canonical url_hash
   *    (first-discovery-wins at insert) — membership IS the seen set;
-  *  - `seen`      the frontier hashes, partitioned by `pmod(url_hash, P)`:
-  *    each tick appends its admitted hashes as exact sorted delta lists,
-  *    and every `seenCompactEvery` ticks one replace folds them into the
-  *    Bloom segments;
+  *  - `seen`      the frontier hashes, partitioned by `pmod(url_hash, P)`
+  *    and bucketed by that id: snapshot 0 appends the seeds' Bloom
+  *    segments, each tick appends its admitted hashes as exact sorted delta
+  *    lists, and every `seenCompactEvery` ticks one replace folds them into
+  *    the Bloom segments — the table's compaction;
   *  - `fetch_log` lineage: every scheduled URL with status/bytes/partition;
   *    PENDING = frontier ∖ fetch_log, so state is derived, never mutated;
   *  - `extracted` deterministic text+KV per fetched page;
@@ -296,7 +297,7 @@ final class CrawlDriver(
     val frontierDf = spark.createDataset(distinctSeeds).toDF()
     val segments = SeenSet.buildDeltaSegments(
       frontierDf.select("url_hash"), cfg.seenPartitions, cfg.expectedPerSegment)
-    lake.commit(0L, appends = Map("frontier" -> frontierDf), replaces = Map("seen" -> segments.toDF()),
+    lake.commit(0L, appends = Map("frontier" -> frontierDf, "seen" -> segments.toDF()),
       properties = Map(SeenSet.PartitionsProperty -> cfg.seenPartitions.toString))
   }
 
@@ -532,11 +533,12 @@ final class CrawlDriver(
     }
   }
 
-  /** Fold the lake's bucketed tick partitions when the cadence is due —
-    * shared by the full and empty tick paths (they must never diverge). */
+  /** Fold the lake's tick partitions when the cadence is due — shared by
+    * the full and empty tick paths (they must never diverge). `seen` is
+    * left out: its fold is the [[seenWrite]] merge. */
   private def compactLakeIfDue(batchId: Long): Unit =
     if (cfg.lakeCompactEvery > 0 && batchId % cfg.lakeCompactEvery.toLong == 0L)
-      lake.bucketed.keys.toSeq.sorted.foreach(lake.compactBucketed)
+      lake.bucketed.keys.toSeq.sorted.filterNot(_ == "seen").foreach(lake.compactBucketed)
 
   /** The tick's `seen` write as (appends, replaces), shared by the full and
     * empty tick paths: the tick's exact delta lists are appended, and every
@@ -555,11 +557,10 @@ final class CrawlDriver(
 
   /** Empty-schedule tick: identical snapshot TRAJECTORY to the full path on
     * empty inputs, with zero Spark write jobs on non-compact ticks — the
-    * commit writes no bucketed table (it scrubs each one's crash leftover
-    * `_pbatch=batchId` instead) and `seen` inherits its previous dirs, so
-    * the manifest advances with nothing to write. A compact tick still
-    * folds the accumulated delta lists into filter segments (an empty
-    * delta changes nothing about that fold). */
+    * commit writes no table (it scrubs each one's crash leftover
+    * `_pbatch=batchId` instead), so the manifest advances with nothing to
+    * write. A compact tick still folds the accumulated delta lists into
+    * filter segments (an empty delta changes nothing about that fold). */
   private def commitEmptyTick(batchId: Long): TickStats = {
     val (seenAppend, seenReplace) = seenWrite(batchId, None)
     lake.commit(batchId, appends = seenAppend, replaces = seenReplace)

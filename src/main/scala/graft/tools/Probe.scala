@@ -281,7 +281,8 @@ object Probe {
     * the first and last quartile (drift with chain length), the read paths
     * a resuming driver and a consumer hit against the deep snapshot chain
     * (latest-snapshot resolve, frontier/extracted/PENDING reads, a fresh
-    * lake open), and a `gcOrphans` pass with dir-entry counts around it. */
+    * lake open), and an `expireSnapshots` pass with the manifest and `seen`
+    * partition-dir counts around it. */
   private def lakeMeta(spark: SparkSession, args: Seq[String]): String = {
     val nTicks = math.max(4, args.headOption.map(_.toInt).getOrElse(10000))
     val buckets = cores(spark)
@@ -311,13 +312,14 @@ object Probe {
       val (_, tReopen) = timed(CrawlLake.forCrawl(root, spark, buckets = buckets)
         .read("frontier", Encoders.product[FrontierEntry].schema).count())
 
-      def entries(p: Path): Long =
-        if (!Files.isDirectory(p)) 0L
-        else scala.util.Using.resource(Files.list(p))(_.count())
+      def entries(p: Path, prefix: String): Long =
+        scala.util.Using.resource(Files.list(p))(_.filter(_.getFileName.toString.startsWith(prefix)).count())
       val snapDir = Paths.get(root, "snapshots")
-      val seenDir = Paths.get(root, "data", "seen")
-      val before = (entries(snapDir), entries(seenDir))
-      val (gcDeleted, tGc) = timed(lake.gcOrphans(keepSnapshots = 64).size)
+      val seenDir = Paths.get(root, "bucketed", "seen")
+      def counts = (entries(snapDir, ""), entries(seenDir, "_pbatch="))
+      val before = counts
+      val (expired, tExpire) = timed(lake.expireSnapshots(keep = 64).size)
+      val after = counts
       json(
         "mode" -> "lake-meta", "ticks" -> nTicks, "wall_s" -> tEmpty, "ticks_per_sec" -> nTicks / tEmpty,
         "tick_median_first_quartile_s" -> median(tickTimes.take(q)),
@@ -325,9 +327,9 @@ object Probe {
         "latest_resolve_s" -> tLatest, "frontier_read_s" -> tFrontier,
         "extracted_read_s" -> tExtracted, "pending_read_s" -> tPending, "fresh_open_read_s" -> tReopen,
         "rows" -> ListMap("frontier" -> nFrontier, "extracted" -> nExtracted, "pending" -> nPending),
-        "gc_s" -> tGc, "gc_deleted" -> gcDeleted,
-        "snapshot_files" -> ListMap("before" -> before._1, "after" -> entries(snapDir)),
-        "seen_dirs" -> ListMap("before" -> before._2, "after" -> entries(seenDir)))
+        "expire_s" -> tExpire, "expired" -> expired,
+        "snapshot_files" -> ListMap("before" -> before._1, "after" -> after._1),
+        "seen_dirs" -> ListMap("before" -> before._2, "after" -> after._2))
     } finally lake.drop()
   }
 }

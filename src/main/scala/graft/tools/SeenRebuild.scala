@@ -36,9 +36,10 @@ object SeenRebuild {
 
   /** Replace the `seen` table of the crawl lake at `lakeDir` with segments
     * rebuilt from its frontier, committing `p` as the snapshot property the
-    * driver's resume drift guard checks. Returns the new snapshot id; the
-    * commit takes the next batch id, so the crawl's next tick is one batch
-    * later than it would have been. */
+    * driver's resume drift guard checks. The segments land in the commit's
+    * compaction partition, and the superseded ones are dropped after it.
+    * Returns the new snapshot id; the commit takes the next batch id, so
+    * the crawl's next tick is one batch later than it would have been. */
   def rebuild(
       spark: SparkSession,
       lakeDir: String,
@@ -48,8 +49,9 @@ object SeenRebuild {
     val lake = CrawlLake.forCrawl(lakeDir, spark, buckets)
     val frontier = lake.read("frontier", Encoders.product[FrontierEntry].schema)
     val segments = SeenSet.buildDeltaSegments(frontier.select("url_hash"), p, expectedPerSegment)
-    val batchId = lake.latestSnapshotId.map(id => lake.batchIdOf(id) + 1).getOrElse(0L)
-    lake.commit(batchId, appends = Map.empty, replaces = Map("seen" -> segments.toDF()),
+    val latest = lake.latestSnapshotId.getOrElse(
+      throw new IllegalArgumentException(s"no lake snapshot under $lakeDir: nothing to rebuild"))
+    lake.commit(lake.batchIdOf(latest) + 1, appends = Map.empty, replaces = Map("seen" -> segments.toDF()),
       properties = Map(SeenSet.PartitionsProperty -> p.toString))
   }
 }

@@ -1,6 +1,6 @@
 package graft.crawl
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -37,6 +37,52 @@ class CrawlDriverSpec extends AnyFunSuite {
   private def engineOrder(d: CrawlDriver): Vector[(Long, Long, Int)] =
     d.crawlOrder().select("batch_id", "url_hash", "status")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toVector
+
+  private def simOrder(budget: Int, ticks: Int): Vector[(Long, Long, Int)] =
+    simResult(budget, ticks).crawlOrder.map(r => (r.batchId, r.urlHash, r.status)).toVector
+
+  private val segmentSchema = org.apache.spark.sql.Encoders.product[graft.seen.SeenSet.Segment].schema
+
+  /** `seen`'s rows at the latest snapshot, as a sorted comparable list. */
+  private def seenRows(lake: CrawlLake): Seq[(Int, String, Long)] =
+    lake.read("seen", segmentSchema).as[graft.seen.SeenSet.Segment].collect()
+      .map(s => (s.partition_id, java.util.Base64.getEncoder.encodeToString(s.segment), s.n_items))
+      .toSeq.sorted
+
+  /** The `_pbatch` ids of table `t`'s partition dirs on disk. */
+  private def partitionDirs(lake: CrawlLake, t: String): Set[Long] =
+    scala.util.Using.resource(Files.list(Paths.get(lake.root, "bucketed", t)))(_.iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("_pbatch="))
+      .map(_.stripPrefix("_pbatch=").toLong).toSet)
+
+  /** Copy table `t`'s partition `from` to partition `to`, as a crash after
+    * a commit's write but before its manifest leaves it; returns the copied
+    * file names. */
+  private def plant(lake: CrawlLake, t: String, from: Long, to: Long): Set[Path] = {
+    val dir = Paths.get(lake.root, "bucketed", t)
+    val dst = Files.createDirectories(dir.resolve(s"_pbatch=$to"))
+    scala.util.Using.resource(Files.list(dir.resolve(s"_pbatch=$from")))(_.iterator().asScala.map { f =>
+      Files.copy(f, dst.resolve(f.getFileName)).getFileName
+    }.toSet)
+  }
+
+  /** Storage holds no more than the latest snapshot reads: every partition
+    * dir of every table is registered and visible at the latest snapshot,
+    * and there is no `data/` dir. */
+  private def assertStorageTight(lake: CrawlLake): Unit = {
+    val latest = lake.latestSnapshotId.get
+    val batch = lake.batchIdOf(latest)
+    lake.bucketed.keys.toSeq.sorted.foreach { t =>
+      val dirs = partitionDirs(lake, t)
+      assert(lake.partitionIds(t).toSet == dirs, t)
+      val visible: Long => Boolean = lake.compactMeta(latest).get(t) match {
+        case Some((cid, through)) => p => p == -cid || (p > through && p <= batch)
+        case None => p => p >= 0 && p <= batch
+      }
+      assert(dirs.forall(visible), s"$t holds partitions that snapshot $latest cannot see: ${dirs.filterNot(visible)}")
+    }
+    assert(!Files.exists(Paths.get(lake.root, "data")))
+  }
 
   test("crawl order + seen set + extracted text match the sequential oracle exactly") {
     val cfg = CrawlConfig(budget = 2, seenPartitions = 8, expectedPerSegment = 4096)
@@ -262,10 +308,12 @@ class CrawlDriverSpec extends AnyFunSuite {
     val sim = simResult(budget = 2, ticks = 4)
     assert(engineOrder(driver) == sim.crawlOrder.map(r => (r.batchId, r.urlHash, r.status)))
 
-    // after the tick-3 compaction + the tick-4 delta append, `seen` lists
-    // exactly two dirs (compacted filters + one delta) — not one per tick
-    val seenDirs = lake.manifest(lake.latestSnapshotId.get)("seen")
-    assert(seenDirs.size == 2, seenDirs)
+    // after the tick-3 compaction + the tick-4 delta append, `seen` holds
+    // exactly two partitions on disk (compacted filters + one delta) — not
+    // one per tick
+    val seenParts = partitionDirs(lake, "seen")
+    assert(seenParts.size == 2 && seenParts.count(_ < 0) == 1, seenParts)
+    assertStorageTight(lake)
 
     // delta blobs are raw sorted hashes: 16 bytes fixed header + 8 B/key —
     // per-tick seen bytes track the admitted count, never P × filter size
@@ -343,9 +391,10 @@ class CrawlDriverSpec extends AnyFunSuite {
       lake.partitionIds("fetch_log"))
     assert(lake.partitionIds("extracted").size <= 1 + cfg.lakeCompactEvery,
       lake.partitionIds("extracted"))
-    // dir tables: seen = filters + deltas since the last fold
-    val m = lake.manifest(lake.latestSnapshotId.get)
-    assert(m("seen").size <= 1 + cfg.seenCompactEvery, m("seen"))
+    // seen: the merged filters + deltas since the last fold
+    assert(partitionDirs(lake, "seen").size <= 1 + cfg.seenCompactEvery, partitionDirs(lake, "seen"))
+    // and nothing superseded stays on disk
+    assertStorageTight(lake)
   }
 
   test("soak: TTL + bounded retry + compaction + enrich together, resume-exact") {
@@ -463,7 +512,7 @@ class CrawlDriverSpec extends AnyFunSuite {
         construct(CrawlLake.forCrawl(tmp(), spark, buckets = 8), enrich = true)),
       "no enrich over an enriched crawl lake" -> (() =>
         construct(CrawlLake.forCrawl(tmp(), spark, buckets = 8, enrich = true), enrich = false)),
-      "a lake with no bucketed tables" -> (() => construct(CrawlLake(tmp(), spark), enrich = false)))
+      "a lake with no tables" -> (() => construct(new CrawlLake(tmp(), spark, Map.empty), enrich = false)))
     mismatches.foreach { case (what, build) =>
       val e = intercept[IllegalArgumentException](build())
       assert(e.getMessage.contains("CrawlLake.forCrawl"), s"$what: ${e.getMessage}")
@@ -527,14 +576,7 @@ class CrawlDriverSpec extends AnyFunSuite {
     val committed = counts(driver)
     val next = stats.last.batchId + 1
     val tables = lake.bucketed.keys.toSeq.sorted
-    tables.foreach { t =>
-      val dir = java.nio.file.Paths.get(lake.root, "bucketed", t)
-      val src = dir.resolve(s"_pbatch=${lake.partitionIds(t).max}")
-      val dst = Files.createDirectories(dir.resolve(s"_pbatch=$next"))
-      scala.util.Using.resource(Files.list(src))(_.iterator().forEachRemaining { f =>
-        Files.copy(f, dst.resolve(f.getFileName)); ()
-      })
-    }
+    tables.foreach(t => plant(lake, t, from = lake.partitionIds(t).max, to = next))
     // a fresh lake object over the same root registers the planted partitions
     val reopened = CrawlLake.forCrawl(lake.root, spark, buckets = 8)
     tables.foreach(t => assert(reopened.partitionIds(t).contains(next), t))
@@ -545,6 +587,67 @@ class CrawlDriverSpec extends AnyFunSuite {
     assert(s.batchId == next && s.scheduled == 0L, s)
     assert(counts(resumed) == committed)
     tables.foreach(t => assert(!reopened.partitionIds(t).contains(next), t))
+  }
+
+  test("a crashed seen replace's partition never becomes visible; its retry reclaims it") {
+    // stop before the tick that merges `seen`, then plant a copy of a
+    // committed `seen` partition as that replace's compaction partition, as
+    // a crash after its write but before its manifest leaves it
+    val cfg = CrawlConfig(budget = 2, seenPartitions = 8, expectedPerSegment = 4096, seenCompactEvery = 3)
+    val (driver, lake) = newDriver(cfg)
+    driver.init(PageSynth.seeds(N, 3))
+    driver.run(2)
+    val committed = seenRows(lake)
+    val next = lake.latestSnapshotId.get + 1
+    val planted = plant(lake, "seen", from = lake.partitionIds("seen").max, to = -next)
+    val reopened = CrawlLake.forCrawl(lake.root, spark, buckets = 8)
+    assert(reopened.partitionIds("seen").contains(-next))
+    assert(seenRows(reopened) == committed)
+    val resumed = new CrawlDriver(
+      spark, reopened, spark.createDataFrame(corpus.map(_.page)),
+      spark.createDataset(robotsEntries), cfg)
+    resumed.run(3) // tick 3 retries the replace at snapshot `next`
+    assert(reopened.compactMeta(next).get("seen").contains((next, 3L)))
+    assert(engineOrder(resumed) == simOrder(budget = 2, ticks = 5))
+    assert(resumed.frontier.select("url_hash").as[Long].collect().toSet == simResult(2, 5).seenHashes)
+    // the retry dropped the planted files before it wrote its own
+    val rewritten = scala.util.Using.resource(
+      Files.list(Paths.get(lake.root, "bucketed", "seen", s"_pbatch=-$next")))(_.iterator().asScala
+      .map(_.getFileName).toSet)
+    assert(rewritten.nonEmpty && rewritten.intersect(planted).isEmpty, rewritten)
+    assertStorageTight(reopened)
+  }
+
+  test("a crashed compaction's partitions never become visible; the next compaction reclaims them") {
+    // plant a copy of a committed partition of every table as the next
+    // snapshot's compaction partition, as a compactBucketed that crashed
+    // after its write but before its manifest leaves it; the resumed crawl
+    // commits a plain tick at that snapshot id, so the planted partitions
+    // outlive it until tick 4 merges `seen` and compacts the other tables
+    val cfg = CrawlConfig(
+      budget = 2, seenPartitions = 8, expectedPerSegment = 4096, seenCompactEvery = 4, lakeCompactEvery = 4)
+    val (driver, lake) = newDriver(cfg)
+    driver.init(PageSynth.seeds(N, 3))
+    driver.run(2)
+    def state(d: CrawlDriver, l: CrawlLake) =
+      (d.frontier.count(), d.fetchLog.count(), d.extracted.count(), seenRows(l))
+    val committed = state(driver, lake)
+    val next = lake.latestSnapshotId.get + 1
+    val tables = lake.bucketed.keys.toSeq.sorted
+    tables.foreach(t => plant(lake, t, from = lake.partitionIds(t).max, to = -next))
+    val reopened = CrawlLake.forCrawl(lake.root, spark, buckets = 8)
+    val resumed = new CrawlDriver(
+      spark, reopened, spark.createDataFrame(corpus.map(_.page)),
+      spark.createDataset(robotsEntries), cfg)
+    assert(state(resumed, reopened) == committed)
+    assert(resumed.tick().batchId == 3L && reopened.latestSnapshotId.contains(next))
+    tables.foreach(t => assert(reopened.partitionIds(t).contains(-next), t))
+    assert(engineOrder(resumed) == simOrder(budget = 2, ticks = 3))
+    resumed.run(2)
+    assert(engineOrder(resumed) == simOrder(budget = 2, ticks = 5))
+    assert(resumed.frontier.select("url_hash").as[Long].collect().toSet == simResult(2, 5).seenHashes)
+    tables.foreach(t => assert(!reopened.partitionIds(t).contains(-next), t))
+    assertStorageTight(reopened)
   }
 
   test("resuming with a different seenPartitions fails fast (seen-geometry drift guard)") {
@@ -575,7 +678,7 @@ class CrawlDriverSpec extends AnyFunSuite {
     // then every bucketed table is compacted: the guard still fires
     assert(mk(8).run(2).forall(_.scheduled > 0))
     val lake = CrawlLake.forCrawl(root, spark, buckets = 8)
-    assert(lake.manifest(lake.latestSnapshotId.get)("seen").size == 1)
+    assert(lake.partitionIds("seen").size == 1)
     lake.bucketed.keys.toSeq.sorted.foreach(lake.compactBucketed)
     assertGuardFires()
     assert(mk(8).tick().scheduled > 0)

@@ -50,7 +50,7 @@ class SeenSetSpec extends AnyFunSuite {
   private val seenHashes = (0L until 3000L).map(i => XxHash64.hashLong(i, 3L))
   private val newHashes = (0L until 1000L).map(i => XxHash64.hashLong(i + 7777777L, 5L))
 
-  test("agg-built segments + filterNewFiltered ≡ filterNewExact") {
+  test("agg-built segments + filterNew ≡ filterNewExact") {
     val p = 8
     val seenDf = seenHashes.toDF("url_hash")
     val segments = SeenSet.buildDeltaSegments(seenDf, p, expectedPerSegment = 1024)
@@ -110,7 +110,7 @@ class SeenSetSpec extends AnyFunSuite {
     assert(out.toSeq == newHashes.sorted.toSeq)
   }
 
-  test("filterNewFiltered plans the probe cogroup exactly once") {
+  test("filterNew plans the probe cogroup exactly once") {
     val p = 8
     val seenDf = seenHashes.toDF("url_hash")
     val segments = SeenSet.buildDeltaSegments(seenDf, p, expectedPerSegment = 1024)
