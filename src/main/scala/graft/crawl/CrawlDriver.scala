@@ -77,10 +77,10 @@ final case class CrawlConfig(
       * cogroup ORs filter ⊕ deltas, so correctness is unaffected. */
     seenCompactEvery: Int = 8,
     /** fold each bucketed table's tick partitions (frontier, fetch_log,
-      * extracted) into one compacted partition every K ticks, bounding
-      * read-side file counts over long crawls (0 = off — the
-      * Iceberg-rewrite-style maintenance is an explicit choice, like
-      * running expire-snapshots). */
+      * extracted) into one compacted partition every K ticks, as a replace
+      * in that tick's own commit, bounding read-side file counts over long
+      * crawls (0 = off — the Iceberg-rewrite-style maintenance is an
+      * explicit choice, like running expire-snapshots). */
     lakeCompactEvery: Int = 0) {
 
   /** Bloom is the seen set's only filter kind; kept for callers that still
@@ -104,14 +104,14 @@ final case class TickStats(
   * is a Catalyst-planned DataFrame op and the only node boundaries are the
   * politeness shuffle and the commit.
   *
-  * State model (all in [[CrawlLake]], committed atomically per tick):
+  * State model (all in [[CrawlLake]], one snapshot per tick):
   *  - `frontier`  append-only, exactly one row per canonical url_hash
   *    (first-discovery-wins at insert) — membership IS the seen set;
   *  - `seen`      the frontier hashes, partitioned by `pmod(url_hash, P)`
   *    and bucketed by that id: snapshot 0 appends the seeds' Bloom
   *    segments, each tick appends its admitted hashes as exact sorted delta
-  *    lists, and every `seenCompactEvery` ticks one replace folds them into
-  *    the Bloom segments — the table's compaction;
+  *    lists, and every `seenCompactEvery` ticks the tick replaces `seen` by
+  *    them folded into the Bloom segments — the table's compaction;
   *  - `fetch_log` lineage: every scheduled URL with status/bytes/partition;
   *    PENDING = frontier ∖ fetch_log, so state is derived, never mutated;
   *  - `extracted` deterministic text+KV per fetched page;
@@ -419,7 +419,7 @@ final class CrawlDriver(
     // fetch/extract/discovery/probe machinery (~10 Spark jobs of pure
     // overhead per empty tick in steady-state TTL operation) down to the
     // snapshot bookkeeping, which stays byte-identical: empty appends plus
-    // the same seen-compaction cadence
+    // the same compaction cadences
     val scheduledCount = scheduled.count()
     if (scheduledCount == 0L) return commitEmptyTick(batchId)
 
@@ -511,19 +511,15 @@ final class CrawlDriver(
           admittedNew = admittedCount)
       } else TickStats(batchId, scheduledCount, scheduledCount, 0L, 0L, admittedCount)
 
-    val (seenAppend, seenReplace) =
-      seenWrite(batchId, Some(SeenSet.buildDeltaList(fresh.select("url_hash"), cfg.seenPartitions)))
-    lake.commit(
-      batchId,
-      appends = Map(
-        "frontier" -> fresh,
-        "fetch_log" -> fetchRows,
-        "extracted" -> extractedRows) ++ seenAppend,
-      replaces = seenReplace)
+    val (appends, replaces) = tickWrites(batchId, Map(
+      "frontier" -> fresh,
+      "fetch_log" -> fetchRows,
+      "extracted" -> extractedRows,
+      "seen" -> SeenSet.buildDeltaList(fresh.select("url_hash"), cfg.seenPartitions).toDF()))
+    lake.commit(batchId, appends, replaces)
 
     if (sys.env.contains("GRAFT_TRACE"))
       println(f"[trace] tick $batchId total: ${(System.nanoTime() - tTrace) / 1e9}%.2fs")
-    compactLakeIfDue(batchId)
     stats
     } finally {
       // scheduled/fresh are localCheckpoints — their RDD blocks are
@@ -533,38 +529,36 @@ final class CrawlDriver(
     }
   }
 
-  /** Fold the lake's tick partitions when the cadence is due — shared by
-    * the full and empty tick paths (they must never diverge). `seen` is
-    * left out: its fold is the [[seenWrite]] merge. */
-  private def compactLakeIfDue(batchId: Long): Unit =
-    if (cfg.lakeCompactEvery > 0 && batchId % cfg.lakeCompactEvery.toLong == 0L)
-      lake.bucketed.keys.toSeq.sorted.filterNot(_ == "seen").foreach(lake.compactBucketed)
-
-  /** The tick's `seen` write as (appends, replaces), shared by the full and
-    * empty tick paths: the tick's exact delta lists are appended, and every
-    * `seenCompactEvery` ticks one replace folds them into the filter
-    * segments instead (a full P-segment rewrite per tick was
-    * delta-independent write amplification; 0 = never fold, matching
-    * lakeCompactEvery's 0-is-off convention). An empty tick has no `delta`,
-    * so unless it compacts it writes nothing. */
-  private def seenWrite(
+  /** The tick's writes as (appends, replaces), one rule per table shared
+    * by the full and empty tick paths (they must never diverge): when its
+    * cadence is due (`seenCompactEvery` for `seen`, `lakeCompactEvery` for
+    * the others; 0 = never) the tick replaces the table by its visible rows
+    * plus the tick's `rows` — its compaction, in the tick's own commit;
+    * otherwise the tick appends its rows. `seen` folds by merging its delta
+    * lists into the Bloom segments. */
+  private def tickWrites(
       batchId: Long,
-      delta: Option[Dataset[SeenSet.Segment]]): (Map[String, DataFrame], Map[String, DataFrame]) =
-    if (cfg.seenCompactEvery > 0 && batchId % cfg.seenCompactEvery.toLong == 0L)
-      (Map.empty, Map("seen" -> SeenSet.mergeSegments(
-        seenSegments, delta.getOrElse(SeenSet.emptySegments(spark)), cfg.expectedPerSegment).toDF()))
-    else (delta.map(d => "seen" -> d.toDF()).toMap, Map.empty)
+      rows: Map[String, DataFrame]): (Map[String, DataFrame], Map[String, DataFrame]) = {
+    val replaced = lake.bucketed.keySet.filter { t =>
+      val every = if (t == "seen") cfg.seenCompactEvery else cfg.lakeCompactEvery
+      every > 0 && batchId % every == 0L
+    }
+    def fold(t: String): DataFrame =
+      if (t == "seen") SeenSet.mergeSegments(seenSegments,
+        rows.get(t).fold(SeenSet.emptySegments(spark))(_.as[SeenSet.Segment]), cfg.expectedPerSegment).toDF()
+      else rows.get(t).foldLeft(lake.read(t, lake.bucketed(t).schema))(_ unionByName _)
+    (rows -- replaced, replaced.map(t => t -> fold(t)).toMap)
+  }
 
   /** Empty-schedule tick: identical snapshot TRAJECTORY to the full path on
     * empty inputs, with zero Spark write jobs on non-compact ticks — the
     * commit writes no table (it scrubs each one's crash leftover
     * `_pbatch=batchId` instead), so the manifest advances with nothing to
-    * write. A compact tick still folds the accumulated delta lists into
-    * filter segments (an empty delta changes nothing about that fold). */
+    * write. A compacting tick still replaces each due table by its
+    * visible rows alone. */
   private def commitEmptyTick(batchId: Long): TickStats = {
-    val (seenAppend, seenReplace) = seenWrite(batchId, None)
-    lake.commit(batchId, appends = seenAppend, replaces = seenReplace)
-    compactLakeIfDue(batchId)
+    val (appends, replaces) = tickWrites(batchId, Map.empty)
+    lake.commit(batchId, appends, replaces)
     TickStats(batchId, 0L, 0L, 0L, 0L, 0L)
   }
 

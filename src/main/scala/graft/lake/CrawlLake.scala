@@ -59,8 +59,9 @@ import graft.functions.GraftFunctions.bound_value
   * watermark to `(s, batchId)`: T's rows are then that partition plus the
   * tick partitions after `batchId`. Once the manifest is published, T's
   * superseded partitions are dropped, and T's snapshots before s are
-  * expired for time travel. [[compactBucketed]] is a replace of a table by
-  * its own visible rows (Iceberg's rewrite is a `replace` snapshot too).
+  * expired for time travel. Compaction is a replace (Iceberg's rewrite is a
+  * `replace` snapshot too): by a tick, of T's rows plus its own, or by
+  * [[compactBucketed]], of T's rows alone.
   *
   * Snapshot properties: each manifest carries a string map (Iceberg's table
   * metadata `properties`) that a commit inherits from the previous snapshot

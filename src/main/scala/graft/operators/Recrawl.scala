@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * runs inside each bucket scan with NO exchange — and its output keeps the
   * bucket partitioning, so the frontier left-join is also exchange-free on
   * both sides (asserted in RecrawlSpec). The fetch_log scan itself stays
-  * bounded by lake compaction ([[graft.lake.CrawlLake.compactBucketed]]).
+  * bounded by lake compaction ([[graft.crawl.CrawlConfig.lakeCompactEvery]]).
   */
 object Recrawl {
 

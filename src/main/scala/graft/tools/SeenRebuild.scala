@@ -38,8 +38,8 @@ object SeenRebuild {
     * rebuilt from its frontier, committing `p` as the snapshot property the
     * driver's resume drift guard checks. The segments land in the commit's
     * compaction partition, and the superseded ones are dropped after it.
-    * Returns the new snapshot id; the commit takes the next batch id, so
-    * the crawl's next tick is one batch later than it would have been. */
+    * Returns the new snapshot id; like a compaction, the commit republishes
+    * the latest batch, so the crawl's batch ids and cadences are unchanged. */
   def rebuild(
       spark: SparkSession,
       lakeDir: String,
@@ -51,7 +51,7 @@ object SeenRebuild {
     val segments = SeenSet.buildDeltaSegments(frontier.select("url_hash"), p, expectedPerSegment)
     val latest = lake.latestSnapshotId.getOrElse(
       throw new IllegalArgumentException(s"no lake snapshot under $lakeDir: nothing to rebuild"))
-    lake.commit(lake.batchIdOf(latest) + 1, appends = Map.empty, replaces = Map("seen" -> segments.toDF()),
+    lake.commit(lake.batchIdOf(latest), appends = Map.empty, replaces = Map("seen" -> segments.toDF()),
       properties = Map(SeenSet.PartitionsProperty -> p.toString))
   }
 }

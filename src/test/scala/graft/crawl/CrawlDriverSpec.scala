@@ -349,7 +349,13 @@ class CrawlDriverSpec extends AnyFunSuite {
       budget = 2, seenPartitions = 8, expectedPerSegment = 4096, lakeCompactEvery = 2)
     val (driver, lake) = newDriver(cfg)
     driver.init(PageSynth.seeds(N, 3))
-    driver.run(4) // compactions after ticks 2 and 4
+    (1L to 4L).foreach { b => // ticks 2 and 4 compact
+      assert(driver.tick().batchId == b)
+      // one snapshot per tick, compacting or not
+      assert(lake.latestSnapshotId.contains(b), s"tick $b")
+      if (b % 2 == 0)
+        Seq("extracted", "fetch_log", "frontier").foreach(t => assert(lake.compactMeta(b).get(t).contains((b, b)), t))
+    }
     val sim = simResult(budget = 2, ticks = 4)
     assert(engineOrder(driver) == sim.crawlOrder.map(r => (r.batchId, r.urlHash, r.status)))
 
@@ -366,6 +372,11 @@ class CrawlDriverSpec extends AnyFunSuite {
     resumed.run(1)
     val simFull = simResult(budget = 2, ticks = 5)
     assert(engineOrder(resumed) == simFull.crawlOrder.map(r => (r.batchId, r.urlHash, r.status)))
+    // and it lays the lake out as a straight-through crawl does
+    val (straight, straightLake) = newDriver(cfg)
+    straight.init(PageSynth.seeds(N, 3))
+    straight.run(5)
+    lake2.bucketed.keys.foreach(t => assert(lake2.partitionIds(t).sorted == straightLake.partitionIds(t).sorted, t))
   }
 
   test("long run: 20+ ticks with compaction keeps files bounded and the oracle exact") {
@@ -619,34 +630,87 @@ class CrawlDriverSpec extends AnyFunSuite {
   }
 
   test("a crashed compaction's partitions never become visible; the next compaction reclaims them") {
-    // plant a copy of a committed partition of every table as the next
-    // snapshot's compaction partition, as a compactBucketed that crashed
-    // after its write but before its manifest leaves it; the resumed crawl
-    // commits a plain tick at that snapshot id, so the planted partitions
-    // outlive it until tick 4 merges `seen` and compacts the other tables
+    // tick 4 replaces all four tables (both cadences due). Plant a copy of a
+    // committed partition of every table as snapshot `next`'s compaction
+    // partition, as a commit that crashed after its writes but before its
+    // manifest leaves it. Stopped after tick 3, the resumed tick 4 retries
+    // that replace at snapshot `next`; stopped after tick 2, a plain tick 3
+    // lands on snapshot `next` and tick 4's replace reclaims the planted
+    // partitions
     val cfg = CrawlConfig(
       budget = 2, seenPartitions = 8, expectedPerSegment = 4096, seenCompactEvery = 4, lakeCompactEvery = 4)
+    for (stopAfter <- Seq(3, 2)) {
+      val (driver, lake) = newDriver(cfg)
+      driver.init(PageSynth.seeds(N, 3))
+      driver.run(stopAfter)
+      def state(d: CrawlDriver, l: CrawlLake) =
+        (d.frontier.count(), d.fetchLog.count(), d.extracted.count(), seenRows(l))
+      val committed = state(driver, lake)
+      val next = lake.latestSnapshotId.get + 1
+      val tables = lake.bucketed.keys.toSeq.sorted
+      val planted = tables.map(t => t -> plant(lake, t, from = lake.partitionIds(t).max, to = -next)).toMap
+      val reopened = CrawlLake.forCrawl(lake.root, spark, buckets = 8)
+      tables.foreach(t => assert(reopened.partitionIds(t).contains(-next), t))
+      val resumed = new CrawlDriver(
+        spark, reopened, spark.createDataFrame(corpus.map(_.page)),
+        spark.createDataset(robotsEntries), cfg)
+      assert(state(resumed, reopened) == committed)
+      assert(resumed.tick().batchId == stopAfter + 1L && reopened.latestSnapshotId.contains(next))
+      if (stopAfter == 2) {
+        tables.foreach(t => assert(reopened.partitionIds(t).contains(-next), t))
+        assert(engineOrder(resumed) == simOrder(budget = 2, ticks = 3))
+      } else tables.foreach(t => assert(reopened.compactMeta(next).get(t).contains((next, next)), t))
+      resumed.run(4 - stopAfter)
+      assert(engineOrder(resumed) == simOrder(budget = 2, ticks = 5), s"stopped after $stopAfter")
+      assert(resumed.frontier.select("url_hash").as[Long].collect().toSet == simResult(2, 5).seenHashes)
+      // no planted file is left: a retried write drops its partition before
+      // it writes, and a replace drops the negative partitions it supersedes
+      tables.foreach { t =>
+        val dir = Paths.get(lake.root, "bucketed", t, s"_pbatch=-$next")
+        val left = if (!Files.exists(dir)) Set.empty[Path]
+          else scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.map(_.getFileName).toSet)
+        assert(left.intersect(planted(t)).isEmpty, s"$t after a stop at $stopAfter: $left")
+      }
+      assertStorageTight(reopened)
+    }
+  }
+
+  test("a replace that crashed after its publish leaves its superseded partitions to the next replace") {
+    // both cadences are 2, so tick 4 replaces every table, superseding a
+    // tick partition and tick 2's compaction partition of each. Copy them
+    // aside before tick 4 and restore them after it, as a crash between the
+    // manifest flip and the drops leaves them
+    val cfg = CrawlConfig(
+      budget = 2, seenPartitions = 8, expectedPerSegment = 4096, seenCompactEvery = 2, lakeCompactEvery = 2)
     val (driver, lake) = newDriver(cfg)
     driver.init(PageSynth.seeds(N, 3))
-    driver.run(2)
-    def state(d: CrawlDriver, l: CrawlLake) =
-      (d.frontier.count(), d.fetchLog.count(), d.extracted.count(), seenRows(l))
-    val committed = state(driver, lake)
-    val next = lake.latestSnapshotId.get + 1
+    driver.run(3)
     val tables = lake.bucketed.keys.toSeq.sorted
-    tables.foreach(t => plant(lake, t, from = lake.partitionIds(t).max, to = -next))
+    val aside = Files.createTempDirectory("graft-superseded")
+    def copyTree(from: Path, to: Path): Unit = // skips what is already there
+      scala.util.Using.resource(Files.walk(from))(_.iterator().asScala.foreach { f =>
+        val dst = to.resolve(from.relativize(f).toString)
+        if (!Files.exists(dst)) Files.copy(f, dst)
+      })
+    val superseded = tables.map(t => t -> lake.partitionIds(t).toSet).toMap
+    assert(superseded.values.forall(_.exists(_ < 0)), superseded)
+    tables.foreach(t => copyTree(Paths.get(lake.root, "bucketed", t), aside.resolve(t)))
+    assert(driver.tick().batchId == 4L)
+    def state(d: CrawlDriver, l: CrawlLake) =
+      (engineOrder(d), d.frontier.count(), d.extracted.count(), seenRows(l))
+    val published = state(driver, lake)
+    tables.foreach(t => superseded(t).foreach { p =>
+      copyTree(aside.resolve(t).resolve(s"_pbatch=$p"), Paths.get(lake.root, "bucketed", t, s"_pbatch=$p"))
+    })
     val reopened = CrawlLake.forCrawl(lake.root, spark, buckets = 8)
+    tables.foreach(t => assert(superseded(t).subsetOf(reopened.partitionIds(t).toSet), t))
     val resumed = new CrawlDriver(
       spark, reopened, spark.createDataFrame(corpus.map(_.page)),
       spark.createDataset(robotsEntries), cfg)
-    assert(state(resumed, reopened) == committed)
-    assert(resumed.tick().batchId == 3L && reopened.latestSnapshotId.contains(next))
-    tables.foreach(t => assert(reopened.partitionIds(t).contains(-next), t))
-    assert(engineOrder(resumed) == simOrder(budget = 2, ticks = 3))
-    resumed.run(2)
-    assert(engineOrder(resumed) == simOrder(budget = 2, ticks = 5))
-    assert(resumed.frontier.select("url_hash").as[Long].collect().toSet == simResult(2, 5).seenHashes)
-    tables.foreach(t => assert(!reopened.partitionIds(t).contains(-next), t))
+    assert(state(resumed, reopened) == published)
+    assert(resumed.run(2).forall(_.scheduled > 0)) // tick 6 replaces every table again
+    assert(engineOrder(resumed) == simOrder(budget = 2, ticks = 6))
+    assert(resumed.frontier.select("url_hash").as[Long].collect().toSet == simResult(2, 6).seenHashes)
     assertStorageTight(reopened)
   }
 
